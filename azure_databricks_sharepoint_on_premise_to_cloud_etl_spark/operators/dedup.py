@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..functions import (
     char_shingles,
     fast_hash64,
@@ -836,102 +837,104 @@ def incremental_dedup_against(
     re-shingle the increment text — three scans instead of one.  The
     persisted footprint is O(increment), never O(corpus).  Call
     ``graph.release_components(result)`` after consuming the result to
-    free it (the standard release-hook convention)."""
+    free it."""
     from pyspark import StorageLevel
 
-    wide = artifact_frame(
-        new_df, id_col, text_col, k, num_hashes, portable
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    new_arts = _arts_from_wide(wide, id_col, num_hashes, bands)
-    new_digests = new_arts["digests"].withColumnRenamed(id_col, "new_id")
-    ref_digests = ref["digests"].withColumnRenamed(id_col, "ref_id")
-    exact = (
-        new_digests.join(ref_digests, ["content_hash", "content_len"])
-        .groupBy("new_id")
-        .agg(F.min("ref_id").alias("exact_match"))
-    )
+    with materialize.scope() as ms:
+        wide = ms.hold(
+            artifact_frame(
+                new_df, id_col, text_col, k, num_hashes, portable
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        new_arts = _arts_from_wide(wide, id_col, num_hashes, bands)
+        new_digests = new_arts["digests"].withColumnRenamed(id_col, "new_id")
+        ref_digests = ref["digests"].withColumnRenamed(id_col, "ref_id")
+        exact = (
+            new_digests.join(ref_digests, ["content_hash", "content_len"])
+            .groupBy("new_id")
+            .agg(F.min("ref_id").alias("exact_match"))
+        )
 
-    new_bands = new_arts["bands"].withColumnRenamed(id_col, "new_id")
-    ref_bands = ref["bands"].withColumnRenamed(id_col, "ref_id")
-    candidates = (
-        new_bands.join(ref_bands, ["band_id", "band_key"])
-        .select("new_id", "ref_id")
-        .distinct()
-    )
-    # exact-Jaccard verification confined to candidates: shingle sets
-    # are joined onto the (bounded) candidate list, never self-joined.
-    # Join strategy is SIZE-GATED on the actual ref-shingle row count
-    # (see _SHINGLE_BROADCAST_ROWS): small corpora broadcast (the
-    # measured-fastest local plan), large ones take SHUFFLE_HASH on
-    # both array-valued sides — parquet size statistics undercount
-    # shingle tables ~10×, so the planner left alone would broadcast
-    # hundreds of MB of deserialized arrays at scale; shuffle-hash
-    # shuffles each side once by id with no driver collection and no
-    # sort over ~1k-element array rows.
-    sh_new = new_arts["shingles"].select(
-        F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
-    )
-    sh_ref = ref["shingles"].select(
-        F.col(id_col).alias("ref_id"), F.col("shingles").alias("sh_r")
-    )
-    if ref_shingle_rows is None:
-        # column-less count: Catalyst prunes the shingle projection,
-        # so this never materializes arrays (ad-hoc mode) and reads
-        # only footer metadata (parquet-artifact mode).  The count is
-        # memoized per ref-plan semantic hash: the SAME reference
-        # corpus is checked against every incoming batch (and every
-        # bench rep), and re-running a ~1 s count job per batch for a
-        # value that only changes when the corpus changes is pure
-        # waste.  The memo only picks a JOIN STRATEGY — a stale count
-        # after a corpus rewrite can cost performance, never
-        # correctness — and falls back to counting if the internal
-        # semanticHash API is unavailable.
-        key = None
-        try:
-            key = ref["shingles"]._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:
-            pass
-        if key is not None and key in _GATE_ROWS_MEMO:
-            ref_shingle_rows = _GATE_ROWS_MEMO[key]
+        new_bands = new_arts["bands"].withColumnRenamed(id_col, "new_id")
+        ref_bands = ref["bands"].withColumnRenamed(id_col, "ref_id")
+        candidates = (
+            new_bands.join(ref_bands, ["band_id", "band_key"])
+            .select("new_id", "ref_id")
+            .distinct()
+        )
+        # exact-Jaccard verification confined to candidates: shingle sets
+        # are joined onto the (bounded) candidate list, never self-joined.
+        # Join strategy is SIZE-GATED on the actual ref-shingle row count
+        # (see _SHINGLE_BROADCAST_ROWS): small corpora broadcast (the
+        # measured-fastest local plan), large ones take SHUFFLE_HASH on
+        # both array-valued sides — parquet size statistics undercount
+        # shingle tables ~10×, so the planner left alone would broadcast
+        # hundreds of MB of deserialized arrays at scale; shuffle-hash
+        # shuffles each side once by id with no driver collection and no
+        # sort over ~1k-element array rows.
+        sh_new = new_arts["shingles"].select(
+            F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
+        )
+        sh_ref = ref["shingles"].select(
+            F.col(id_col).alias("ref_id"), F.col("shingles").alias("sh_r")
+        )
+        if ref_shingle_rows is None:
+            # column-less count: Catalyst prunes the shingle projection,
+            # so this never materializes arrays (ad-hoc mode) and reads
+            # only footer metadata (parquet-artifact mode).  The count is
+            # memoized per ref-plan semantic hash: the SAME reference
+            # corpus is checked against every incoming batch (and every
+            # bench rep), and re-running a ~1 s count job per batch for a
+            # value that only changes when the corpus changes is pure
+            # waste.  The memo only picks a JOIN STRATEGY — a stale count
+            # after a corpus rewrite can cost performance, never
+            # correctness — and falls back to counting if the internal
+            # semanticHash API is unavailable.
+            key = None
+            try:
+                key = ref["shingles"]._jdf.queryExecution().analyzed().semanticHash()
+            except Exception:
+                pass
+            if key is not None and key in _GATE_ROWS_MEMO:
+                ref_shingle_rows = _GATE_ROWS_MEMO[key]
+            else:
+                ref_shingle_rows = ref["shingles"].count()
+                if key is not None:
+                    if len(_GATE_ROWS_MEMO) > 256:
+                        _GATE_ROWS_MEMO.clear()
+                    _GATE_ROWS_MEMO[key] = ref_shingle_rows
+        inter = F.size(F.array_intersect("sh_n", "sh_r"))
+        union = F.size("sh_n") + F.size("sh_r") - inter
+        if ref_shingle_rows <= _SHINGLE_BROADCAST_ROWS:
+            verify = candidates.join(sh_new, "new_id").join(
+                F.broadcast(sh_ref), "ref_id"
+            )
         else:
-            ref_shingle_rows = ref["shingles"].count()
-            if key is not None:
-                if len(_GATE_ROWS_MEMO) > 256:
-                    _GATE_ROWS_MEMO.clear()
-                _GATE_ROWS_MEMO[key] = ref_shingle_rows
-    inter = F.size(F.array_intersect("sh_n", "sh_r"))
-    union = F.size("sh_n") + F.size("sh_r") - inter
-    if ref_shingle_rows <= _SHINGLE_BROADCAST_ROWS:
-        verify = candidates.join(sh_new, "new_id").join(
-            F.broadcast(sh_ref), "ref_id"
+            verify = candidates.join(
+                sh_new.hint("shuffle_hash"), "new_id"
+            ).join(sh_ref.hint("shuffle_hash"), "ref_id")
+        near = (
+            verify.filter(F.round(inter / union, 6) >= threshold)
+            .groupBy("new_id")
+            .agg(F.min("ref_id").alias("near_match"))
         )
-    else:
-        verify = candidates.join(
-            sh_new.hint("shuffle_hash"), "new_id"
-        ).join(sh_ref.hint("shuffle_hash"), "ref_id")
-    near = (
-        verify.filter(F.round(inter / union, 6) >= threshold)
-        .groupBy("new_id")
-        .agg(F.min("ref_id").alias("near_match"))
-    )
 
-    result = (
-        new_df.select(F.col(id_col).alias("new_id"))
-        .join(exact, "new_id", "left")
-        .join(near, "new_id", "left")
-        .select(
-            F.col("new_id").alias(id_col),
-            F.when(F.col("exact_match").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("near_match").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("novel"))
-            .alias("status"),
-            F.coalesce("exact_match", "near_match").alias("match_id"),
+        result = (
+            new_df.select(F.col(id_col).alias("new_id"))
+            .join(exact, "new_id", "left")
+            .join(near, "new_id", "left")
+            .select(
+                F.col("new_id").alias(id_col),
+                F.when(F.col("exact_match").isNotNull(), F.lit("exact_dup"))
+                .when(F.col("near_match").isNotNull(), F.lit("near_dup"))
+                .otherwise(F.lit("novel"))
+                .alias("status"),
+                F.coalesce("exact_match", "near_match").alias("match_id"),
+            )
         )
-    )
-    # release hook: graph.release_components(result) unpersists the
-    # increment-side artifact frame once the result is consumed
-    result._persisted_intermediates = [wide]
-    return result
+        # release_components(result) unpersists the increment-side
+        # artifact frame once the result is consumed
+        return ms.attach(result)
 
 
 def fuzzy_value_pairs(
@@ -1086,32 +1089,32 @@ def sorted_neighborhood_pairs(
     """
     from . import windows as _w
 
-    ranked = _w.global_rank(
-        df.select(F.col(id_col).alias("__id"), F.col(key_col).alias("__k")),
-        [F.col("__k").asc(), F.col("__id").asc()],
-        rank_col="__pos",
-    )
-    offs = F.explode(
-        F.array(*[F.lit(i) for i in range(1, window + 1)])
-    ).alias("__o")
-    probes = ranked.select("*", offs).select(
-        F.col("__id").alias("id_a"),
-        F.col("__k").alias("key_a"),
-        (F.col("__pos") + F.col("__o")).alias("__pos"),
-        F.col("__o").alias("pos_gap"),
-    )
-    result = probes.join(
-        ranked.select(
-            F.col("__id").alias("id_b"),
-            F.col("__k").alias("key_b"),
+    with materialize.scope() as ms:
+        ranked = ms.hold(
+            _w.global_rank(
+                df.select(F.col(id_col).alias("__id"), F.col(key_col).alias("__k")),
+                [F.col("__k").asc(), F.col("__id").asc()],
+                rank_col="__pos",
+            )
+        )
+        offs = F.explode(
+            F.array(*[F.lit(i) for i in range(1, window + 1)])
+        ).alias("__o")
+        probes = ranked.select("*", offs).select(
+            F.col("__id").alias("id_a"),
+            F.col("__k").alias("key_a"),
+            (F.col("__pos") + F.col("__o")).alias("__pos"),
+            F.col("__o").alias("pos_gap"),
+        )
+        result = probes.join(
+            ranked.select(
+                F.col("__id").alias("id_b"),
+                F.col("__k").alias("key_b"),
+                "__pos",
+            ),
             "__pos",
-        ),
-        "__pos",
-    ).select("id_a", "id_b", "key_a", "key_b", "pos_gap")
-    result._persisted_intermediates = getattr(
-        ranked, "_persisted_intermediates", None
-    )
-    return result
+        ).select("id_a", "id_b", "key_a", "key_b", "pos_gap")
+        return ms.attach(result)
 
 
 def plan_lsh(

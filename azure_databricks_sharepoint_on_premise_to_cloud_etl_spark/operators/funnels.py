@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
+from ..materialize import release_components
+
 
 def funnel_times(
     df: DataFrame,
@@ -1157,104 +1160,102 @@ def markov_journey_edges(
         order.append(F.col(tiebreak_col).asc())
     from pyspark.sql import Observation
 
-    # Converter-cardinality table referenced TWICE (the touches join
-    # and the bare-converter anti-join — each re-derivation a corpus
-    # filter+aggregate); one eager checkpoint runs it once.  The
-    # NULL-entity filter matches the oracle's semantics on BOTH
-    # consumers: count(DISTINCT user) ignores NULLs and `NOT IN`
-    # excludes a NULL probe, while the touches equi-join never matched
-    # a NULL key anyway.  The row count rides the checkpoint job as an
-    # Observation: it IS the oracle's distinct-converter count
-    # (r13 derived n_conv from summed CONV edges instead, which
-    # silently dropped converters whose conversion events all carry
-    # NULL timestamps — the r13 advice item; this restores the
-    # distinct-entity semantics for free).
-    conv_obs = Observation()
-    conv_ts = (
-        df.filter((F.col(channel_col) == conversion) & e.isNotNull())
-        .groupBy(e.alias("__e"))
-        .agg(F.min(time_col).alias("__cts"))
-        .observe(conv_obs, F.count(F.lit(1)).alias("__n_conv"))
-        .localCheckpoint(eager=True)
-    )
-    n_converters = int(conv_obs.get["__n_conv"] or 0)
-    base = df.filter(
-        e.isNotNull()
-        & F.col(channel_col).isNotNull()
-        & F.col(time_col).isNotNull()
-    )
-    touches = (
-        base.join(conv_ts, e == F.col("__e"), "left")
-        .filter(
-            (F.col(channel_col) != conversion)
-            & (
-                F.col("__cts").isNull()
-                | (F.col(time_col) < F.col("__cts"))
+    with materialize.scope() as ms:
+        # Converter-cardinality table referenced TWICE (the touches join
+        # and the bare-converter anti-join — each re-derivation a corpus
+        # filter+aggregate); one eager checkpoint runs it once.  The
+        # NULL-entity filter matches the oracle's semantics on BOTH
+        # consumers: count(DISTINCT user) ignores NULLs and `NOT IN`
+        # excludes a NULL probe, while the touches equi-join never matched
+        # a NULL key anyway.  The row count rides the checkpoint job as an
+        # Observation: it IS the oracle's distinct-converter count
+        # (r13 derived n_conv from summed CONV edges instead, which
+        # silently dropped converters whose conversion events all carry
+        # NULL timestamps — the r13 advice item; this restores the
+        # distinct-entity semantics for free).
+        conv_obs = Observation()
+        conv_ts = ms.checkpoint(
+            df.filter((F.col(channel_col) == conversion) & e.isNotNull())
+            .groupBy(e.alias("__e"))
+            .agg(F.min(time_col).alias("__cts"))
+            .observe(conv_obs, F.count(F.lit(1)).alias("__n_conv"))
+        )
+        n_converters = int(conv_obs.get["__n_conv"] or 0)
+        base = df.filter(
+            e.isNotNull()
+            & F.col(channel_col).isNotNull()
+            & F.col(time_col).isNotNull()
+        )
+        touches = (
+            base.join(conv_ts, e == F.col("__e"), "left")
+            .filter(
+                (F.col(channel_col) != conversion)
+                & (
+                    F.col("__cts").isNull()
+                    | (F.col(time_col) < F.col("__cts"))
+                )
+            )
+            .select(
+                e.alias("__u"),
+                F.col(time_col).alias("__t"),
+                *( [F.col(tiebreak_col).alias("__tb")] if tiebreak_col else [] ),
+                F.col(channel_col).alias("__ch"),
+                F.col("__cts").isNotNull().alias("__converted"),
             )
         )
-        .select(
-            e.alias("__u"),
-            F.col(time_col).alias("__t"),
-            *( [F.col(tiebreak_col).alias("__tb")] if tiebreak_col else [] ),
-            F.col(channel_col).alias("__ch"),
-            F.col("__cts").isNotNull().alias("__converted"),
+        w_order = [F.col("__t").asc()] + (
+            [F.col("__tb").asc()] if tiebreak_col else []
         )
-    )
-    w_order = [F.col("__t").asc()] + (
-        [F.col("__tb").asc()] if tiebreak_col else []
-    )
-    w = Window.partitionBy("__u").orderBy(*w_order)
-    w_all = Window.partitionBy("__u")
-    # r13 optimization round: seq is referenced FOUR times (starts,
-    # mids, ends, and — via touches — the bare-converter anti-join);
-    # without materialization the conv-time join + ordered window
-    # pipeline re-executes per reference.  One eager checkpoint of the
-    # windowed sequence runs the corpus pass once (guide §1.2); the
-    # caller releases it through the result's _extra_ckpts hook.
-    seq = (
-        touches.withColumn("__rn", F.row_number().over(w))
-        .withColumn("__nxt", F.lead("__ch").over(w))
-        .withColumn("__n", F.count(F.lit(1)).over(w_all))
-        .localCheckpoint(eager=True)
-    )
-    starts = seq.filter(F.col("__rn") == 1).select(
-        F.lit(MARKOV_START).alias("src"), F.col("__ch").alias("dst")
-    )
-    mids = seq.filter(F.col("__nxt").isNotNull()).select(
-        F.col("__ch").alias("src"), F.col("__nxt").alias("dst")
-    )
-    ends = seq.filter(F.col("__rn") == F.col("__n")).select(
-        F.col("__ch").alias("src"),
-        F.when(F.col("__converted"), F.lit(MARKOV_CONV))
-        .otherwise(F.lit(MARKOV_NULL))
-        .alias("dst"),
-    )
-    # converters whose first event IS the conversion: bare START->CONV
-    # (touched rows == seq rows, so derive it from the checkpoint)
-    touched = seq.select("__u").distinct()
-    bare = (
-        conv_ts.join(
-            touched, F.col("__e") == touched["__u"], "left_anti"
-        ).select(
-            F.lit(MARKOV_START).alias("src"),
-            F.lit(MARKOV_CONV).alias("dst"),
+        w = Window.partitionBy("__u").orderBy(*w_order)
+        w_all = Window.partitionBy("__u")
+        # r13 optimization round: seq is referenced FOUR times (starts,
+        # mids, ends, and — via touches — the bare-converter anti-join);
+        # without materialization the conv-time join + ordered window
+        # pipeline re-executes per reference.  One eager checkpoint of the
+        # windowed sequence runs the corpus pass once (guide §1.2); the
+        # result carries it until release_components.
+        seq = ms.checkpoint(
+            touches.withColumn("__rn", F.row_number().over(w))
+            .withColumn("__nxt", F.lead("__ch").over(w))
+            .withColumn("__n", F.count(F.lit(1)).over(w_all))
         )
-    )
-    edges = starts.unionByName(mids).unionByName(ends).unionByName(bare)
-    counts = edges.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).alias("n_edges")
-    )
-    w_src = Window.partitionBy("src")
-    result = counts.withColumn(
-        "p",
-        F.round(
-            F.col("n_edges").cast("double") / F.sum("n_edges").over(w_src),
-            6,
-        ),
-    )
-    result._extra_ckpts = [seq, conv_ts]
-    result._n_converters = n_converters
-    return result
+        starts = seq.filter(F.col("__rn") == 1).select(
+            F.lit(MARKOV_START).alias("src"), F.col("__ch").alias("dst")
+        )
+        mids = seq.filter(F.col("__nxt").isNotNull()).select(
+            F.col("__ch").alias("src"), F.col("__nxt").alias("dst")
+        )
+        ends = seq.filter(F.col("__rn") == F.col("__n")).select(
+            F.col("__ch").alias("src"),
+            F.when(F.col("__converted"), F.lit(MARKOV_CONV))
+            .otherwise(F.lit(MARKOV_NULL))
+            .alias("dst"),
+        )
+        # converters whose first event IS the conversion: bare START->CONV
+        # (touched rows == seq rows, so derive it from the checkpoint)
+        touched = seq.select("__u").distinct()
+        bare = (
+            conv_ts.join(
+                touched, F.col("__e") == touched["__u"], "left_anti"
+            ).select(
+                F.lit(MARKOV_START).alias("src"),
+                F.lit(MARKOV_CONV).alias("dst"),
+            )
+        )
+        edges = starts.unionByName(mids).unionByName(ends).unionByName(bare)
+        counts = edges.groupBy("src", "dst").agg(
+            F.count(F.lit(1)).alias("n_edges")
+        )
+        w_src = Window.partitionBy("src")
+        result = counts.withColumn(
+            "p",
+            F.round(
+                F.col("n_edges").cast("double") / F.sum("n_edges").over(w_src),
+                6,
+            ),
+        )
+        result._n_converters = n_converters
+        return ms.attach(result)
 
 
 def _markov_value_iteration(
@@ -1337,10 +1338,7 @@ def markov_attribution(
     probs = {(r["src"], r["dst"]): float(r["p"]) for r in rows_c}
     # the edge builder's windowed-sequence checkpoint is fully
     # consumed by the collect — free it now
-    from .graph import _release_local_checkpoint
-
-    for _h in getattr(cells, "_extra_ckpts", None) or []:
-        _release_local_checkpoint(_h)
+    release_components(cells)
     # Distinct-converter count (the oracle's count(DISTINCT entity)
     # over conversion events): rides the edge builder's conv_ts
     # checkpoint job as an Observation, so it costs no extra pass.

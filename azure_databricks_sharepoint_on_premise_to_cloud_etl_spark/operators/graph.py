@@ -36,134 +36,21 @@ embed all prior joins and exhaust driver/executor memory):
   are deleted as soon as the next one is materialized, and the
   SparkContext's previous checkpoint dir is restored on exit.
 
-The PREVIOUS generation's storage is released each round by
-unpersisting the checkpointed RDD itself (reaching through the
-``LogicalRDD`` plan node — a plain ``DataFrame.unpersist()`` only
-clears cache-manager entries and is a no-op for checkpoints), bounding
-local-mode storage at two label-table copies for real.  Release
-happens strictly AFTER the next generation is eagerly materialized:
-unpersisting a localCheckpoint's blocks is unrecoverable by design.
+Both go through the package's ``materialize`` module: the previous
+generation is released each round strictly AFTER the next one is
+eagerly materialized, bounding storage at two label-table copies, and
+the final generation rides the result until
+``release_components(result)`` (re-exported here for existing
+callers).
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CC_DEBUG = os.environ.get("CC_DEBUG", "") not in ("", "0")
-
-
-def _delete_reliable_checkpoint(df: DataFrame) -> None:
-    """Delete a reliable-checkpointed DataFrame's files NOW.
-
-    Spark's ReferenceTracking cleaner removes checkpoint files only on
-    JVM GC of the RDD object and only when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set; an
-    iterative algorithm that checkpoints every round would otherwise
-    grow storage linearly with iteration count.  Best-effort: on any
-    reflection surprise the files are left for the cleaner/caller.
-    """
-    try:
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        opt = jrdd.getCheckpointFile()
-        if not opt.isDefined():
-            return
-        sc = df.sparkSession.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(opt.get())
-        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(path, True)
-    except Exception:
-        pass
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint-ed DataFrame's blocks NOW.
-
-    ``df.unpersist()`` does not do this — localCheckpoint persists the
-    underlying RDD outside the cache manager, and its blocks are
-    otherwise only freed when the JVM RDD object is GC'd.  Reach the
-    RDD through the analyzed ``LogicalRDD`` node and unpersist it
-    directly.  Best-effort: on any reflection surprise we fall back to
-    GC-based cleanup (correct, just lazier).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-# serializes the session-global AQE toggle inside _ckpt_keyed /
-# _ckpt_preserve (r13 advice: composed queries submit jobs from driver
-# thread pools)
-import threading as _threading
-
-_AQE_TOGGLE_LOCK = _threading.Lock()
-
-
-def _ckpt_keyed(df: DataFrame, *keys: str, sort: bool = True) -> DataFrame:
-    """Eagerly localCheckpoint ``df`` hash-partitioned (and, by
-    default, sorted) by ``keys``, temporarily disabling AQE around the
-    checkpoint so the resulting ``LogicalRDD`` RETAINS its
-    outputPartitioning/outputOrdering — under AQE the captured final
-    plan reports ``UnknownPartitioning`` and the partitioning
-    knowledge is lost (measured: every downstream join re-shuffles
-    the checkpointed side).
-
-    This is the optimization-guide §2.4 "share one exchange" shape
-    for iterative operators: a static edge table referenced by k
-    per-round joins on the same key pays ONE shuffle+sort at build
-    instead of k shuffles+sorts at iteration time — a sort-merge join
-    then consumes this side with no Exchange and no Sort (partition
-    count is pinned to the session's shuffle partitions so the other
-    side's exchange lands on the same layout).
-
-    AQE is only off for the checkpoint job itself (a repartition —
-    nothing AQE would improve); every downstream query still plans
-    adaptively.
-
-    Thread safety (r13 advice): the AQE toggle mutates SESSION-global
-    conf, so concurrent driver threads (the composed-query thread
-    pools) planning a query while it is off would silently get a
-    non-adaptive plan.  ``_AQE_TOGGLE_LOCK`` serializes the toggle
-    window; callers submitting jobs from several threads remain
-    responsible for not planning OTHER queries concurrently with a
-    keyed checkpoint (the lock protects the helpers against each
-    other, not against arbitrary concurrent planning).
-    """
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            plan = df.repartition(n, *[F.col(k) for k in keys])
-            if sort:
-                plan = plan.sortWithinPartitions(*keys)
-            return plan.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _ckpt_preserve(df: DataFrame) -> DataFrame:
-    """Eagerly localCheckpoint ``df`` WITHOUT an extra repartition,
-    with AQE disabled around the checkpoint so whatever partitioning/
-    ordering the plan naturally ends with (e.g. the grouping key of a
-    final aggregate, the join key of a final join) is retained by the
-    ``LogicalRDD`` instead of decaying to ``UnknownPartitioning``.
-    Use when the plan already ends in the layout the next round needs;
-    use :func:`_ckpt_keyed` to force one.  Shares
-    ``_AQE_TOGGLE_LOCK`` — see the thread-safety note there."""
-    spark = df.sparkSession
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+from .. import materialize
+from ..materialize import release_components  # noqa: F401 — public path
 
 
 def _strip_inherited_stats(df: DataFrame) -> DataFrame:
@@ -291,14 +178,14 @@ def connected_components(
     (frontier filter, per-level jump maps, the frontier-incident
     delta aggregates — bounded by the frontier's one-hop
     neighborhood, so size the threshold with mean degree in mind) and
-    AQE disabled for exactly that round's checkpoint action — non-AQE
-    execution skips AQE's per-exchange stage-materialization jobs.
+    planned with AQE disabled — non-AQE execution skips AQE's
+    per-exchange stage-materialization jobs.
     Rounds with big frontiers keep the AQE path — broadcast safety
     there depends on runtime sizes only AQE knows — so at cluster
     scale the early heavy rounds stay adaptive and only the long
     cheap tail (frontiers shrink geometrically) takes the bypass.
-    The AQE conf is flipped only around the snapshot action and
-    restored in a ``finally``; pass ``0`` to disable the bypass.
+    AQE is off only while that round's plan is built (the
+    ``materialize`` planning window); pass ``0`` to disable the bypass.
     Measured effect at sf0.1 is recorded in BASELINE.md (round 9).
 
     ``driver_finish_edges`` selects the SMALL-GRAPH regime: the
@@ -320,51 +207,27 @@ def connected_components(
     Pass ``0`` to force the distributed loop (tests do, to exercise
     it on small fixtures).
     """
-    spark = edges.sparkSession
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        # save/restore: setCheckpointDir mutates global SparkContext
-        # state that would otherwise leak past this call
-        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = opt.get() if opt.isDefined() else None
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def snapshot(df: DataFrame) -> tuple[DataFrame, int]:
+    def snapshot(
+        df: DataFrame, fast: bool = False
+    ) -> tuple[DataFrame, DataFrame, int]:
         # piggyback the convergence check on the materializing job:
         # an Observation over the eager checkpoint counts changed rows
         # during the SAME job, so no separate isEmpty/count action runs
         # per round (measured ~0.1-0.2 s of job-launch overhead saved
-        # per round in local mode)
+        # per round in local mode).  Returns the held checkpoint (what
+        # ms.release frees) and its stats-stripped rewrap (what the next
+        # round reads): without the rewrap, join-multiplied size
+        # estimates compound per round and the driver stalls for
+        # minutes in BigInteger math while planning round ~10+.
         from pyspark.sql import Observation
 
         obs = Observation()
         dfo = df.observe(
             obs, F.sum(F.col("changed").cast("long")).alias("__nc")
         )
-        if checkpoint_dir is not None:
-            ckpt = dfo.checkpoint(eager=True)
-        else:
-            ckpt = dfo.localCheckpoint(eager=True)
-        n_changed = int(obs.get["__nc"] or 0)
-        # strip the inherited size estimate (see _strip_inherited_stats:
-        # without this, join-multiplied estimates compound per round and
-        # the driver stalls for minutes in BigInteger math while
-        # planning round ~10+).  Keep the real checkpointed frame on the
-        # wrapper so release() can still reach the persisted RDD.
-        out = _strip_inherited_stats(ckpt)
-        out._ckpt_handle = ckpt
-        return out, n_changed
-
-    def release(df: DataFrame) -> None:
-        df = getattr(df, "_ckpt_handle", df)
-        if checkpoint_dir is None:
-            _release_local_checkpoint(df)
-        else:
-            # delete the superseded generation's checkpoint files NOW:
-            # Spark's reference-tracking cleaner only reclaims them on
-            # JVM GC (and only with cleanCheckpoints=true), so a long
-            # CC run otherwise accumulates one generation per round
-            _delete_reliable_checkpoint(df)
+        gen = ms.checkpoint(dfo, layout=fast)
+        return gen, _strip_inherited_stats(gen), int(obs.get["__nc"] or 0)
 
     # symmetrize once and materialize via eager localCheckpoint, NOT
     # cache: a cached plan keeps its pre-AQE output partitioning
@@ -391,298 +254,208 @@ def connected_components(
     sym_plan = sym_plan.observe(
         sym_obs, F.count(F.lit(1)).alias("__n_sym")
     )
-    # reliable-checkpoint mode keeps sym reliable too (an executor loss
-    # mid-iteration must not kill the run on preemptible fleets)
-    sym = (
-        sym_plan.checkpoint(eager=True)
-        if checkpoint_dir is not None
-        else sym_plan.localCheckpoint(eager=True)
-    )
-    n_sym = int(sym_obs.get["__n_sym"] or 0)
-    if n_sym <= driver_finish_edges:
-        # SMALL-GRAPH regime: the whole candidate graph fits on the
-        # driver — finish with union-find instead of distributed rounds
-        # (see docstring).  One collect of the materialized checkpoint,
-        # microseconds of union-find, one broadcast-joined re-attach.
-        try:
+    with materialize.scope(checkpoint_dir) as ms:
+        # reliable-checkpoint mode keeps sym reliable too (an executor
+        # loss mid-iteration must not kill the run on preemptible fleets)
+        sym = ms.checkpoint(sym_plan)
+        small = int(sym_obs.get["__n_sym"] or 0) <= driver_finish_edges
+        if small:
+            # SMALL-GRAPH regime: the whole candidate graph fits on the
+            # driver — finish with union-find instead of distributed
+            # rounds (see docstring).  One collect of the materialized
+            # checkpoint, microseconds of union-find, one
+            # broadcast-joined re-attach.
             labels = _driver_union_find_labels(sym)
-        finally:
-            if checkpoint_dir is None:
-                _release_local_checkpoint(sym)
-            else:
-                _delete_reliable_checkpoint(sym)
-            if prev_ckpt_dir is not None:
-                spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
-        result = nodes.select(F.col(node_col)).join(
-            F.broadcast(labels.withColumnRenamed("node", node_col)),
-            node_col,
-            "left",
-        ).select(
-            node_col,
-            F.coalesce(F.col("component"), F.col(node_col)).alias(
-                "component"
-            ),
-        )
-        # no checkpoint generation backs this result — release hook is
-        # a safe no-op, kept for caller-code symmetry
-        result._cc_final_generation = None
-        result._cc_checkpoint_dir = checkpoint_dir
-        return result
-    try:
-        # Iterate ONLY over edge endpoints: after LSH, candidate pairs
-        # touch a small fraction of the corpus, while every node outside
-        # any pair is trivially its own component.  Carrying the full
-        # node set through every round (as r2 did) shuffles the
-        # non-duplicate majority — usually >90% of the corpus — per
-        # iteration for no information; isolated nodes are re-attached
-        # once at the end with coalesce(component, node).
-        # The standing label table carries a ``changed`` flag instead
-        # of a separate frontier table: one checkpointed generation per
-        # round (same action count as the full-table formulation — one
-        # eager snapshot + one isEmpty — but the expensive per-round
-        # work is frontier-sized).  The seed FUSES round 0: starting
-        # every endpoint at least(self, min neighbor) is exactly the
-        # state after a self-label round (whose parent-delivery is a
-        # provable no-op: every component is still its own node), so
-        # one groupBy replaces the endpoint-distinct shuffle AND the
-        # first — most expensive, frontier=everything — iteration.
-        labels, n_changed = snapshot(
-            sym.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select(
-                F.col("a").alias("node"),
-                F.least(F.col("a"), F.col("mb")).alias("component"),
-                (F.col("mb") < F.col("a")).alias("changed"),
-            )
-        )
-        converged = n_changed == 0
-        for _round in range(max_iterations):
-            if converged:
-                break
-            _t0 = time.time() if _CC_DEBUG else 0.0
-            # fast-round bypass: n_changed (from the PREVIOUS round's
-            # Observation, a free byproduct of its checkpoint job) is
-            # exactly this round's frontier size.  When it is
-            # broadcast-small, the round's plan is fully determined —
-            # every join side that matters is frontier-sized — so AQE's
-            # stage-by-stage materialization (one job per exchange,
-            # ~14 jobs/round measured at sf0.1) buys nothing.  Build
-            # the round with explicit broadcast() hints and AQE off:
-            # non-AQE execution runs it as a handful of broadcast-build
-            # jobs plus the checkpoint.  Big-frontier rounds keep AQE —
-            # broadcast safety there depends on runtime sizes only AQE
-            # knows — so at cluster scale the early heavy rounds stay
-            # adaptive and only the geometrically-shrinking tail takes
-            # the bypass.
-            use_fast = 0 < n_changed <= fast_round_threshold
-            _bc = F.broadcast if use_fast else (lambda df: df)
-            # 1. delta propagate: labels only decrease, so a node's
-            #    neighbor-min can only drop via a neighbor whose label
-            #    changed LAST round — every older label was already
-            #    delivered the round after it was set.  Joining sym
-            #    against the (small) frontier filter instead of the
-            #    full label table is the whole point: AQE broadcasts
-            #    the frontier, the cached edge table is never
-            #    re-shuffled, and the groupBy aggregates only
-            #    frontier-incident rows.
-            # ONE frontier frame serves BOTH the edge propagation and
-            # the parent delivery: the two broadcast subtrees share an
-            # identical child plan, so the physical planner emits a
-            # single BroadcastExchange + ReusedExchange — one collect
-            # job per round, not two.
-            fr = _bc(
-                labels.filter("changed").select(
-                    F.col("node").alias("f_n"), F.col("component").alias("f_c")
+            ms.release(sym)
+        else:
+            # Iterate ONLY over edge endpoints: after LSH, candidate pairs
+            # touch a small fraction of the corpus, while every node outside
+            # any pair is trivially its own component.  Carrying the full
+            # node set through every round (as r2 did) shuffles the
+            # non-duplicate majority — usually >90% of the corpus — per
+            # iteration for no information; isolated nodes are re-attached
+            # once at the end with coalesce(component, node).
+            # The standing label table carries a ``changed`` flag instead
+            # of a separate frontier table: one checkpointed generation per
+            # round (same action count as the full-table formulation — one
+            # eager snapshot + one isEmpty — but the expensive per-round
+            # work is frontier-sized).  The seed FUSES round 0: starting
+            # every endpoint at least(self, min neighbor) is exactly the
+            # state after a self-label round (whose parent-delivery is a
+            # provable no-op: every component is still its own node), so
+            # one groupBy replaces the endpoint-distinct shuffle AND the
+            # first — most expensive, frontier=everything — iteration.
+            gen, labels, n_changed = snapshot(
+                sym.groupBy("a")
+                .agg(F.min("b").alias("mb"))
+                .select(
+                    F.col("a").alias("node"),
+                    F.least(F.col("a"), F.col("mb")).alias("component"),
+                    (F.col("mb") < F.col("a")).alias("changed"),
                 )
             )
-            delta_min = _bc(
-                sym.join(fr, sym["b"] == fr["f_n"])
-                .groupBy("a")
-                .agg(F.min("f_c").alias("nbr_min"))
-            )
-            # 2. parent delivery (delayed pointer jumping): a frontier
-            #    node also notifies its LABEL-children — every node
-            #    whose current component IS that frontier node adopts
-            #    the frontier node's new, lower label.  Without this, a
-            #    chain head's improvement reaches the tail at one
-            #    edge-hop per round (O(diameter)); with it, label
-            #    chains compress a round after they form, restoring
-            #    the O(log diameter) behavior of full-table pointer
-            #    jumping at broadcast-join cost.  (Earlier rounds
-            #    measured in-round jumps as a net loss; after the
-            #    exchange-reuse and fused-Observation changes cut the
-            #    per-round floor, the same jumps now pay for
-            #    themselves — steps 4-5 below, re-measured.)
-            # 3. merge: ONE scan of the standing table with two
-            #    broadcast left joins (delta_min and fr are
-            #    frontier-sized) — the standing table is never
-            #    shuffled.  Strictly-lower IS the changed flag; ties
-            #    produce no update, which is what terminates the loop.
-            merged = labels.join(
-                delta_min, labels["node"] == delta_min["a"], "left"
-            ).join(fr, labels["component"] == fr["f_n"], "left")
-            nc = F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_min"), F.col("component")),
-                # unqualified: delta_min aggregated f_c away, so merged
-                # carries exactly one f_c and a dataset-qualified ref
-                # would trip the ambiguous-self-join analyzer
-                F.coalesce(F.col("f_c"), F.col("component")),
-            )
-            mid = merged.select(
-                "node",
-                F.col("component").alias("old"),
-                nc.alias("mid"),
-            )
-            # 4+5 (and 6+7, ...): fused in-round pointer jumps + edge
-            #    hops.  Each LEVEL adopts the label of your NEW label
-            #    if that label itself improved at the previous level
-            #    (pointer jump), and lets neighbors of just-improved
-            #    nodes adopt the improvement immediately (edge hop) —
-            #    all fused into the SAME checkpoint job.  The jump map
-            #    at every level is only the just-improved nodes, a
-            #    broadcast; its subtree appears on both sides so the
-            #    planner emits one BroadcastExchange + ReusedExchange
-            #    per level.  Levels trade plan depth (cheap broadcast
-            #    joins) for ROUNDS (each a fixed checkpoint-job floor,
-            #    measured ~0.55 s in local mode regardless of frontier
-            #    size) — 2 levels measured rounds 10 → 6 (r7), 4
-            #    levels 6 → 4 (r8) at sf0.1.
-            cur = mid  # columns: node, old, {prev}=label after level k-1
-            prev = "mid"
-            for lvl in range(2, fused_levels + 2):
-                jn, jc, nb = f"j_n{lvl}", f"j_c{lvl}", f"nbr{lvl}"
-                an = f"a{lvl}"
-                # improved at the PREVIOUS level (vs round start for
-                # level 2 — level-1 improvers were never delivered):
-                base = "old" if lvl == 2 else f"l{lvl - 1}"
-                jmap = _bc(
-                    cur.filter(F.col(prev) < F.col(base)).select(
-                        F.col("node").alias(jn), F.col(prev).alias(jc)
+            converged = n_changed == 0
+            for _ in range(max_iterations):
+                if converged:
+                    break
+                # fast-round bypass: n_changed (from the PREVIOUS round's
+                # Observation, a free byproduct of its checkpoint job) is
+                # exactly this round's frontier size.  When it is
+                # broadcast-small, the round's plan is fully determined —
+                # every join side that matters is frontier-sized — so AQE's
+                # stage-by-stage materialization (one job per exchange,
+                # ~14 jobs/round measured at sf0.1) buys nothing.  Build
+                # the round with explicit broadcast() hints and AQE off:
+                # non-AQE execution runs it as a handful of broadcast-build
+                # jobs plus the checkpoint.  Big-frontier rounds keep AQE —
+                # broadcast safety there depends on runtime sizes only AQE
+                # knows — so at cluster scale the early heavy rounds stay
+                # adaptive and only the geometrically-shrinking tail takes
+                # the bypass.
+                use_fast = 0 < n_changed <= fast_round_threshold
+                _bc = F.broadcast if use_fast else (lambda df: df)
+                # 1. delta propagate: labels only decrease, so a node's
+                #    neighbor-min can only drop via a neighbor whose label
+                #    changed LAST round — every older label was already
+                #    delivered the round after it was set.  Joining sym
+                #    against the (small) frontier filter instead of the
+                #    full label table is the whole point: AQE broadcasts
+                #    the frontier, the cached edge table is never
+                #    re-shuffled, and the groupBy aggregates only
+                #    frontier-incident rows.
+                # ONE frontier frame serves BOTH the edge propagation and
+                # the parent delivery: the two broadcast subtrees share an
+                # identical child plan, so the physical planner emits a
+                # single BroadcastExchange + ReusedExchange — one collect
+                # job per round, not two.
+                fr = _bc(
+                    labels.filter("changed").select(
+                        F.col("node").alias("f_n"), F.col("component").alias("f_c")
                     )
                 )
-                delta_l = _bc(
-                    sym.join(jmap, sym["b"] == jmap[jn])
-                    .groupBy(F.col("a").alias(an))
-                    .agg(F.min(jc).alias(nb))
+                delta_min = _bc(
+                    sym.join(fr, sym["b"] == fr["f_n"])
+                    .groupBy("a")
+                    .agg(F.min("f_c").alias("nbr_min"))
                 )
-                stepped = cur.join(
-                    jmap, cur[prev] == jmap[jn], "left"
-                ).join(delta_l, cur["node"] == delta_l[an], "left")
-                nc_l = F.least(
-                    F.col(prev),
-                    F.coalesce(F.col(jc), F.col(prev)),
-                    F.coalesce(F.col(nb), F.col(prev)),
+                # 2. parent delivery (delayed pointer jumping): a frontier
+                #    node also notifies its LABEL-children — every node
+                #    whose current component IS that frontier node adopts
+                #    the frontier node's new, lower label.  Without this, a
+                #    chain head's improvement reaches the tail at one
+                #    edge-hop per round (O(diameter)); with it, label
+                #    chains compress a round after they form, restoring
+                #    the O(log diameter) behavior of full-table pointer
+                #    jumping at broadcast-join cost.  (Earlier rounds
+                #    measured in-round jumps as a net loss; after the
+                #    exchange-reuse and fused-Observation changes cut the
+                #    per-round floor, the same jumps now pay for
+                #    themselves — steps 4-5 below, re-measured.)
+                # 3. merge: ONE scan of the standing table with two
+                #    broadcast left joins (delta_min and fr are
+                #    frontier-sized) — the standing table is never
+                #    shuffled.  Strictly-lower IS the changed flag; ties
+                #    produce no update, which is what terminates the loop.
+                merged = labels.join(
+                    delta_min, labels["node"] == delta_min["a"], "left"
+                ).join(fr, labels["component"] == fr["f_n"], "left")
+                nc = F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("nbr_min"), F.col("component")),
+                    # unqualified: delta_min aggregated f_c away, so merged
+                    # carries exactly one f_c and a dataset-qualified ref
+                    # would trip the ambiguous-self-join analyzer
+                    F.coalesce(F.col("f_c"), F.col("component")),
                 )
-                keep = ["node", "old"] + (
-                    [F.col(prev).alias(f"l{lvl}")] if lvl < fused_levels + 1 else []
+                mid = merged.select(
+                    "node",
+                    F.col("component").alias("old"),
+                    nc.alias("mid"),
                 )
-                nxt = f"v{lvl}"
-                cur = stepped.select(*keep, nc_l.alias(nxt))
-                prev = nxt
-            round_plan = cur.select(
-                "node",
-                F.col(prev).alias("component"),
-                (F.col(prev) < F.col("old")).alias("changed"),
-            )
-            if use_fast:
-                # AQE reads the conf when the action builds the physical
-                # plan (inside snapshot's eager checkpoint) — flip it for
-                # exactly that window, restore on every exit path
-                _aqe_key = "spark.sql.adaptive.enabled"
-                _aqe_prev = spark.conf.get(_aqe_key, "true")
-                spark.conf.set(_aqe_key, "false")
-                try:
-                    new_labels, n_changed = snapshot(round_plan)
-                finally:
-                    spark.conf.set(_aqe_key, _aqe_prev)
-            else:
-                new_labels, n_changed = snapshot(round_plan)
-            # convergence = empty frontier: nothing changed, so nothing
-            # can change next round either.  The changed count rides the
-            # snapshot job via Observation — no extra action.
-            release(labels)  # new generation is materialized; prev never read again
-            labels = new_labels
-            if _CC_DEBUG:
-                print(
-                    f"[cc] round {_round}: {time.time() - _t0:.2f}s"
-                    f" n_changed={n_changed} fast={use_fast}"
+                # 4+5 (and 6+7, ...): fused in-round pointer jumps + edge
+                #    hops.  Each LEVEL adopts the label of your NEW label
+                #    if that label itself improved at the previous level
+                #    (pointer jump), and lets neighbors of just-improved
+                #    nodes adopt the improvement immediately (edge hop) —
+                #    all fused into the SAME checkpoint job.  The jump map
+                #    at every level is only the just-improved nodes, a
+                #    broadcast; its subtree appears on both sides so the
+                #    planner emits one BroadcastExchange + ReusedExchange
+                #    per level.  Levels trade plan depth (cheap broadcast
+                #    joins) for ROUNDS (each a fixed checkpoint-job floor,
+                #    measured ~0.55 s in local mode regardless of frontier
+                #    size) — 2 levels measured rounds 10 → 6 (r7), 4
+                #    levels 6 → 4 (r8) at sf0.1.
+                cur = mid  # columns: node, old, {prev}=label after level k-1
+                prev = "mid"
+                for lvl in range(2, fused_levels + 2):
+                    jn, jc, nb = f"j_n{lvl}", f"j_c{lvl}", f"nbr{lvl}"
+                    an = f"a{lvl}"
+                    # improved at the PREVIOUS level (vs round start for
+                    # level 2 — level-1 improvers were never delivered):
+                    base = "old" if lvl == 2 else f"l{lvl - 1}"
+                    jmap = _bc(
+                        cur.filter(F.col(prev) < F.col(base)).select(
+                            F.col("node").alias(jn), F.col(prev).alias(jc)
+                        )
+                    )
+                    delta_l = _bc(
+                        sym.join(jmap, sym["b"] == jmap[jn])
+                        .groupBy(F.col("a").alias(an))
+                        .agg(F.min(jc).alias(nb))
+                    )
+                    stepped = cur.join(
+                        jmap, cur[prev] == jmap[jn], "left"
+                    ).join(delta_l, cur["node"] == delta_l[an], "left")
+                    nc_l = F.least(
+                        F.col(prev),
+                        F.coalesce(F.col(jc), F.col(prev)),
+                        F.coalesce(F.col(nb), F.col(prev)),
+                    )
+                    keep = ["node", "old"] + (
+                        [F.col(prev).alias(f"l{lvl}")] if lvl < fused_levels + 1 else []
+                    )
+                    nxt = f"v{lvl}"
+                    cur = stepped.select(*keep, nc_l.alias(nxt))
+                    prev = nxt
+                round_plan = cur.select(
+                    "node",
+                    F.col(prev).alias("component"),
+                    (F.col(prev) < F.col("old")).alias("changed"),
                 )
-            if n_changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} "
-                "iterations — graph larger/stranger than the safety bound"
-            )
-    finally:
-        if checkpoint_dir is None:
-            _release_local_checkpoint(sym)
-        else:
-            _delete_reliable_checkpoint(sym)
-        if prev_ckpt_dir is not None:
-            # restored on every exit path, including the convergence
-            # raise; an originally-UNSET dir cannot be restored (no
-            # public unset API) — documented above
-            spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
-    # re-attach isolated nodes: anything outside the edge set is its
-    # own component (one left join, no per-round cost)
-    result = nodes.select(F.col(node_col)).join(
-        labels.withColumnRenamed("node", node_col), node_col, "left"
-    ).select(
-        node_col,
-        F.coalesce(F.col("component"), F.col(node_col)).alias("component"),
-    )
-    # The result plan reads the FINAL checkpointed generation, which
-    # stays persisted until the JVM GCs it — a long-lived session
-    # calling connected_components repeatedly accumulates one
-    # generation per call.  Hand the caller an explicit release hook:
-    # consume the result (collect/write), then release_components(df).
-    result._cc_final_generation = labels
-    result._cc_checkpoint_dir = checkpoint_dir
-    return result
-
-
-def release_components(result: DataFrame) -> bool:
-    """Free executor-side state backing a consumed result DataFrame:
-    the final label generation of a ``connected_components`` result
-    AND/OR any persisted intermediates an operator attached as
-    ``result._persisted_intermediates`` (e.g. the tokenized corpus
-    ``text.remove_repeated_ngrams`` caches between its two passes).
-    Call AFTER the result has been fully consumed (collected or
-    written) — the plan still references this state, so a released
-    result cannot be re-computed.  Returns True if anything was
-    released; False (no-op) for DataFrames carrying neither — safe to
-    call unconditionally in cleanup paths."""
-    released = False
-    gen = getattr(result, "_cc_final_generation", None)
-    if gen is not None:
-        handle = getattr(gen, "_ckpt_handle", gen)
-        if getattr(result, "_cc_checkpoint_dir", None) is None:
-            _release_local_checkpoint(handle)
-        else:
-            _delete_reliable_checkpoint(handle)
-        result._cc_final_generation = None
-        released = True
-    extras = getattr(result, "_persisted_intermediates", None)
-    if extras:
-        for df in extras:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing left to free
-        result._persisted_intermediates = None
-        released = True
-    # additional localCheckpoint handles beyond the primary generation
-    # (e.g. pagerank's degree table)
-    ckpts = getattr(result, "_extra_ckpts", None)
-    if ckpts:
-        for df in ckpts:
-            _release_local_checkpoint(getattr(df, "_ckpt_handle", df))
-        result._extra_ckpts = None
-        released = True
-    return released
+                # AQE reads the conf when the physical plan is built: a fast
+                # round plans inside the scope's AQE-off window, and its job
+                # then runs the non-adaptive plan with the conf restored
+                new_gen, new_labels, n_changed = snapshot(
+                    round_plan, fast=use_fast
+                )
+                # convergence = empty frontier: nothing changed, so nothing
+                # can change next round either.  The changed count rides the
+                # snapshot job via Observation — no extra action.
+                # the new generation is materialized; prev is never read again
+                ms.release(gen)
+                gen, labels = new_gen, new_labels
+                if n_changed == 0:
+                    converged = True
+                    break
+            if not converged:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iterations} "
+                    "iterations — graph larger/stranger than the safety bound"
+                )
+            ms.release(sym)
+        # re-attach isolated nodes: anything outside the edge set is its
+        # own component (one left join, no per-round cost).  The result
+        # reads the FINAL generation, which it carries until the caller
+        # has consumed it and calls release_components(result).
+        labels = labels.withColumnRenamed("node", node_col)
+        result = nodes.select(F.col(node_col)).join(
+            F.broadcast(labels) if small else labels, node_col, "left"
+        ).select(
+            node_col,
+            F.coalesce(F.col("component"), F.col(node_col)).alias("component"),
+        )
+        return ms.attach(result)
 
 
 def triangle_counts(
@@ -716,64 +489,60 @@ def triangle_counts(
 
     Returns (node, n_triangles).
     """
-    # canonical undirected edge set (a < b), self-loops dropped
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
+    with materialize.scope() as ms:
+        # canonical undirected edge set (a < b), self-loops dropped
+        a, b = F.col(src), F.col(dst)
+        e = ms.checkpoint(
+            edges.select(
+                F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
+            )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # orient by (deg, id): degree table is node-count sized — at LSH
-    # candidate scale a broadcast; AQE picks that without a hint here
-    # to stay safe on genuinely huge candidate graphs
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("__da"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("__db"))
-    with_deg = e.join(da, "a").join(db, "b")
-    lower_first = (F.col("__da") < F.col("__db")) | (
-        (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = with_deg.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lower_first, F.col("__db")).otherwise(F.col("__da")).alias(
-            "__dv"
-        ),
-    )
-    o1 = oriented.select("u", F.col("v").alias("x"), F.col("__dv").alias("__dx"))
-    o2 = oriented.select("u", F.col("v").alias("y"), F.col("__dv").alias("__dy"))
-    # wedges at u: out-neighbor pairs (x, y) with x before y in the
-    # SAME (deg, id) total order the orientation used
-    wedges = o1.join(o2, "u").filter(
-        (F.col("__dx") < F.col("__dy"))
-        | ((F.col("__dx") == F.col("__dy")) & (F.col("x") < F.col("y")))
-    )
-    closing = oriented.select(
-        F.col("u").alias("x"), F.col("v").alias("y")
-    )
-    tri = wedges.join(closing, ["x", "y"], "left_semi").select(
-        "u", "x", "y"
-    )
-    result = (
-        tri.select(F.col("u").alias("node"))
-        .unionAll(tri.select(F.col("x").alias("node")))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    # release_components() frees the checkpointed edge blocks through
-    # the same handle convention connected_components uses
-    result._cc_final_generation = e
-    result._cc_checkpoint_dir = None
-    return result
+        deg = (
+            e.select(F.col("a").alias("node"))
+            .unionAll(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        # orient by (deg, id): degree table is node-count sized — at LSH
+        # candidate scale a broadcast; AQE picks that without a hint here
+        # to stay safe on genuinely huge candidate graphs
+        da = deg.select(F.col("node").alias("a"), F.col("deg").alias("__da"))
+        db = deg.select(F.col("node").alias("b"), F.col("deg").alias("__db"))
+        with_deg = e.join(da, "a").join(db, "b")
+        lower_first = (F.col("__da") < F.col("__db")) | (
+            (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
+        )
+        oriented = with_deg.select(
+            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(lower_first, F.col("__db")).otherwise(F.col("__da")).alias(
+                "__dv"
+            ),
+        )
+        o1 = oriented.select("u", F.col("v").alias("x"), F.col("__dv").alias("__dx"))
+        o2 = oriented.select("u", F.col("v").alias("y"), F.col("__dv").alias("__dy"))
+        # wedges at u: out-neighbor pairs (x, y) with x before y in the
+        # SAME (deg, id) total order the orientation used
+        wedges = o1.join(o2, "u").filter(
+            (F.col("__dx") < F.col("__dy"))
+            | ((F.col("__dx") == F.col("__dy")) & (F.col("x") < F.col("y")))
+        )
+        closing = oriented.select(
+            F.col("u").alias("x"), F.col("v").alias("y")
+        )
+        tri = wedges.join(closing, ["x", "y"], "left_semi").select(
+            "u", "x", "y"
+        )
+        result = (
+            tri.select(F.col("u").alias("node"))
+            .unionAll(tri.select(F.col("x").alias("node")))
+            .unionAll(tri.select(F.col("y").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("n_triangles"))
+        )
+        return ms.attach(result)
 
 
 def pagerank(
@@ -801,56 +570,50 @@ def pagerank(
     (``edges`` defines the graph); symmetric graphs have no dangling
     mass.  Returns (node, rank) with rank rounded to 6.
     """
-    a, b = F.col(src), F.col(dst)
-    # NOTE (r13 optimization round): pre-partitioning sym by u (the
-    # _ckpt_keyed shape) was measured ~1.6x SLOWER for this unrolled
-    # LAZY recurrence — one adaptive query where AQE runtime-converts
-    # the per-iteration joins to broadcast-hash and coalesces the
-    # small exchanges; static 32-partition SMJs disabled both.
-    sym = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionAll(
-            edges.select(b.alias("u"), a.alias("v")).filter(
-                F.col("u") != F.col("v")
+    with materialize.scope() as ms:
+        a, b = F.col(src), F.col(dst)
+        # NOTE (r13 optimization round): pre-partitioning sym by u (the
+        # keyed-checkpoint shape) was measured ~1.6x SLOWER for this unrolled
+        # LAZY recurrence — one adaptive query where AQE runtime-converts
+        # the per-iteration joins to broadcast-hash and coalesces the
+        # small exchanges; static 32-partition SMJs disabled both.
+        sym = ms.checkpoint(
+            edges.select(a.alias("u"), b.alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .unionAll(
+                edges.select(b.alias("u"), a.alias("v")).filter(
+                    F.col("u") != F.col("v")
+                )
             )
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    n_nodes = deg.agg(F.count(F.lit(1)).alias("__n"))
-    # degree + node count in one broadcastable side table
-    base = deg.crossJoin(F.broadcast(n_nodes)).localCheckpoint(eager=True)
-    ranks = base.select(
-        F.col("u").alias("node"), (F.lit(1.0) / F.col("__n")).alias("r")
-    )
-    teleport = F.lit(1.0 - damping)
-    for _ in range(iterations):
-        contrib = (
-            sym.join(
-                base.select("u", "deg").join(
-                    ranks.withColumnRenamed("node", "u"), "u"
-                ),
-                "u",
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        n_nodes = deg.agg(F.count(F.lit(1)).alias("__n"))
+        # degree + node count in one broadcastable side table
+        base = ms.checkpoint(deg.crossJoin(F.broadcast(n_nodes)))
+        ranks = base.select(
+            F.col("u").alias("node"), (F.lit(1.0) / F.col("__n")).alias("r")
+        )
+        teleport = F.lit(1.0 - damping)
+        for _ in range(iterations):
+            contrib = (
+                sym.join(
+                    base.select("u", "deg").join(
+                        ranks.withColumnRenamed("node", "u"), "u"
+                    ),
+                    "u",
+                )
+                .select(F.col("v").alias("node"), (F.col("r") / F.col("deg")).alias("__c"))
+                .groupBy("node")
+                .agg(F.sum("__c").alias("__s"))
             )
-            .select(F.col("v").alias("node"), (F.col("r") / F.col("deg")).alias("__c"))
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        ranks = contrib.join(
-            F.broadcast(n_nodes)
-        ).select(
-            "node",
-            (teleport / F.col("__n") + F.lit(damping) * F.col("__s")).alias("r"),
-        )
-    result = ranks.select("node", F.round("r", 6).alias("rank"))
-    result._cc_final_generation = sym
-    result._persisted_intermediates = []
-    result._cc_checkpoint_dir = None
-    # base is a second checkpoint; free it through the same hook
-    result._extra_ckpts = [base]
-    return result
+            ranks = contrib.join(
+                F.broadcast(n_nodes)
+            ).select(
+                "node",
+                (teleport / F.col("__n") + F.lit(damping) * F.col("__s")).alias("r"),
+            )
+        return ms.attach(ranks.select("node", F.round("r", 6).alias("rank")))
 
 
 def k_core(
@@ -892,67 +655,63 @@ def k_core(
     is equivalent whenever the fixpoint is reached within the unroll
     depth — which this function guarantees by raising otherwise.
     """
-    from pyspark.sql import Observation
+    with materialize.scope() as ms:
+        from pyspark.sql import Observation
 
-    a, b = F.col(src), F.col(dst)
-    e_obs = Observation()
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .observe(e_obs, F.count(F.lit(1)).alias("__n_e"))
-        .localCheckpoint(eager=True)
-    )
-    n_e = int(e_obs.get["__n_e"] or 0)
-    spark = edges.sparkSession
-
-    def degrees(ed: DataFrame) -> DataFrame:
-        return (
-            ed.select(F.col("a").alias("node"))
-            .unionAll(ed.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("core_deg"))
+        a, b = F.col(src), F.col(dst)
+        e_obs = Observation()
+        e = ms.checkpoint(
+            edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            .observe(e_obs, F.count(F.lit(1)).alias("__n_e"))
         )
+        n_e = int(e_obs.get["__n_e"] or 0)
+        spark = edges.sparkSession
 
-    # ONE driver job per peel round (r14; was two): the peel set stays
-    # a lazy subtree inside the next-generation checkpoint — its two
-    # broadcast builds share the degree aggregate's exchange (runtime
-    # exchange reuse pays the edge scan + shuffle once) — and the
-    # fixpoint probe is the observed next-generation ROW COUNT (no
-    # peel ⟺ the anti-joins dropped nothing).  Job-launch barriers are
-    # exactly what bounds iterative ops in the flat-alpha regime
-    # SCALE.md records for kcore.
-    for _ in range(max_iterations):
-        deg = degrees(e)
-        low = deg.filter(F.col("core_deg") < k).select("node")
-        obs = Observation()
-        nxt = (
-            e.join(
-                F.broadcast(low.withColumnRenamed("node", "a")), "a", "left_anti"
+        def degrees(ed: DataFrame) -> DataFrame:
+            return (
+                ed.select(F.col("a").alias("node"))
+                .unionAll(ed.select(F.col("b").alias("node")))
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias("core_deg"))
             )
-            .join(
-                F.broadcast(low.withColumnRenamed("node", "b")), "b", "left_anti"
+
+        # ONE driver job per peel round (r14; was two): the peel set stays
+        # a lazy subtree inside the next-generation checkpoint — its two
+        # broadcast builds share the degree aggregate's exchange (runtime
+        # exchange reuse pays the edge scan + shuffle once) — and the
+        # fixpoint probe is the observed next-generation ROW COUNT (no
+        # peel ⟺ the anti-joins dropped nothing).  Job-launch barriers are
+        # exactly what bounds iterative ops in the flat-alpha regime
+        # SCALE.md records for kcore.
+        for _ in range(max_iterations):
+            deg = degrees(e)
+            low = deg.filter(F.col("core_deg") < k).select("node")
+            obs = Observation()
+            nxt = ms.checkpoint(
+                e.join(
+                    F.broadcast(low.withColumnRenamed("node", "a")), "a", "left_anti"
+                )
+                .join(
+                    F.broadcast(low.withColumnRenamed("node", "b")), "b", "left_anti"
+                )
+                .select("a", "b")
+                .observe(obs, F.count(F.lit(1)).alias("__n_nxt"))
             )
-            .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("__n_nxt"))
-            .localCheckpoint(eager=True)
+            n_nxt = int(obs.get["__n_nxt"] or 0)
+            ms.release(e)
+            e = nxt
+            if n_nxt == n_e:
+                # nothing peeled — e is the k-core edge set (identical row
+                # set to the previous generation, so returning its degree
+                # table is the same result the two-job form returned)
+                return ms.attach(degrees(e))
+            n_e = n_nxt
+        raise RuntimeError(
+            f"k_core did not reach its fixpoint in {max_iterations} peels — "
+            "raise max_iterations (and the oracle unroll depth with it)"
         )
-        n_nxt = int(obs.get["__n_nxt"] or 0)
-        _release_local_checkpoint(e)
-        e = nxt
-        if n_nxt == n_e:
-            # nothing peeled — e is the k-core edge set (identical row
-            # set to the previous generation, so returning its degree
-            # table is the same result the two-job form returned)
-            result = degrees(e)
-            result._cc_final_generation = e
-            result._cc_checkpoint_dir = None
-            return result
-        n_e = n_nxt
-    raise RuntimeError(
-        f"k_core did not reach its fixpoint in {max_iterations} peels — "
-        "raise max_iterations (and the oracle unroll depth with it)"
-    )
 
 
 def bfs_distances(
@@ -981,65 +740,58 @@ def bfs_distances(
     released, bounding storage at two generations (same contract as
     connected_components).
     """
-    a, b = F.col(src), F.col(dst)
-    # symmetrize with ONE distinct: union both directions first, then
-    # dedup once (three distincts here would be three shuffles)
-    e0 = edges.select(a.alias("u"), b.alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    # NOTE (r13 optimization round): pre-partitioned checkpoints
-    # (_ckpt_keyed) measured NO gain here — the frontier/distance
-    # tables are small enough that AQE broadcast-joins them, so the
-    # static edge table is never shuffled per hop in the first place
-    # and the extra repartition per generation is pure cost.  Keep
-    # the plain checkpoints and let AQE plan each hop.
-    sym = (
-        e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("node")
-    from pyspark.sql import Observation
-
-    for h in range(1, max_hops + 1):
-        neigh = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
+    with materialize.scope() as ms:
+        a, b = F.col(src), F.col(dst)
+        # symmetrize with ONE distinct: union both directions first, then
+        # dedup once (three distincts here would be three shuffles)
+        e0 = edges.select(a.alias("u"), b.alias("v")).filter(
+            F.col("u") != F.col("v")
+        )
+        # NOTE (r13 optimization round): pre-partitioned checkpoints
+        # (repartition+sort by key, checkpointed with AQE off) measured NO
+        # gain here — the frontier/distance tables are small enough that
+        # AQE broadcast-joins them, so the static edge table is never
+        # shuffled per hop in the first place and the extra repartition
+        # per generation is pure cost.  Keep the plain checkpoints and let
+        # AQE plan each hop.
+        sym = ms.checkpoint(
+            e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .distinct()
         )
-        fresh = neigh.join(dist.select("node"), "node", "left_anti").withColumn(
-            "hops", F.lit(h)
+        dist = ms.checkpoint(
+            sources.select(F.col(node_col).alias("node"))
+            .distinct()
+            .withColumn("hops", F.lit(0))
         )
-        # the settled probe rides the checkpoint job as an Observation
-        # (the connected_components snapshot trick): one job per hop,
-        # not two — job barriers are the floor for iterative ops
-        obs = Observation()
-        nxt = (
-            dist.unionAll(fresh)
-            .observe(
-                obs, F.sum((F.col("hops") == h).cast("long")).alias("__nf")
+        frontier = dist.select("node")
+        from pyspark.sql import Observation
+
+        for h in range(1, max_hops + 1):
+            neigh = (
+                sym.join(frontier.withColumnRenamed("node", "u"), "u")
+                .select(F.col("v").alias("node"))
+                .distinct()
             )
-            .localCheckpoint(eager=True)
-        )
-        settled = int(obs.get["__nf"] or 0) == 0
-        _release_local_checkpoint(dist)
-        dist = nxt
-        if settled:
-            break
-        frontier = dist.filter(F.col("hops") == h).select("node")
-    result = dist
-    result._cc_final_generation = sym
-    # the final distance generation backs the result itself; route it
-    # through the same release hook so nothing leaks after consumption
-    result._extra_ckpts = [dist]
-    result._cc_checkpoint_dir = None
-    return result
+            fresh = neigh.join(dist.select("node"), "node", "left_anti").withColumn(
+                "hops", F.lit(h)
+            )
+            # the settled probe rides the checkpoint job as an Observation
+            # (the connected_components snapshot trick): one job per hop,
+            # not two — job barriers are the floor for iterative ops
+            obs = Observation()
+            nxt = ms.checkpoint(
+                dist.unionAll(fresh)
+                .observe(
+                    obs, F.sum((F.col("hops") == h).cast("long")).alias("__nf")
+                )
+            )
+            settled = int(obs.get["__nf"] or 0) == 0
+            ms.release(dist)
+            dist = nxt
+            if settled:
+                break
+            frontier = dist.filter(F.col("hops") == h).select("node")
+        return ms.attach(dist)
 
 
 def shortest_path_costs(
@@ -1077,81 +829,73 @@ def shortest_path_costs(
     engine-independent; float weights share the usual last-ulp
     caveat.
     """
-    # NOTE (r13 optimization round): pre-partitioned checkpoints
-    # (_ckpt_keyed) measured NO gain here — the distance table is
-    # small enough that AQE broadcast-joins it onto the static edge
-    # table each round, so e is never re-shuffled anyway and the
-    # extra repartition per generation is pure cost.
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight_col).alias("w")
-    ).localCheckpoint(eager=True)
-    dist = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Observation
+    with materialize.scope() as ms:
+        # NOTE (r13 optimization round): pre-partitioned checkpoints
+        # (repartition+sort by key, checkpointed with AQE off) measured NO
+        # gain here — the distance table is small enough that AQE
+        # broadcast-joins it onto the static edge table each round, so e
+        # is never re-shuffled anyway and the extra repartition per
+        # generation is pure cost.
+        e = ms.checkpoint(
+            edges.select(
+                F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight_col).alias("w")
+            )
+        )
+        dist = gen = ms.checkpoint(
+            sources.select(F.col(node_col).alias("node"))
+            .distinct()
+            .withColumn("cost", F.lit(0).cast("long"))
+        )
+        from pyspark.sql import Observation
 
-    # r13 optimization round — DELTA relaxation (the queue form of
-    # Bellman–Ford): a node's cost can only improve through a
-    # neighbor whose cost improved LAST round (an unimproved
-    # neighbor's offers were already on the table the round they
-    # first appeared and lost to the standing minimum), so each round
-    # relaxes only from the previous round's improved set instead of
-    # the whole distance table.  Round 1's "improved set" is the seed
-    # table itself — identical to the non-delta round 1 — and the
-    # frontier shrinks geometrically as regions settle; results are
-    # bit-identical, the early-exit condition is unchanged.
-    frontier = dist
-    for _ in range(max_hops):
-        # relax as a full-outer join against the candidate minima —
-        # equivalent to min over (dist ∪ cand) per node, but the form
-        # exposes a per-node `improved` flag that rides the checkpoint
-        # job as an Observation: one job per round, no separate probe
-        candmin = (
-            e.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(
-                F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("__new")
-            )
-            .groupBy("node")
-            .agg(F.min("__new").alias("__new"))
-        )
-        obs = Observation()
-        nxt = (
-            dist.withColumnRenamed("cost", "__old")
-            .join(candmin, "node", "full_outer")
-            .select(
-                "node",
-                F.least(F.col("__old"), F.col("__new")).alias("cost"),
-                (
-                    F.col("__old").isNull()
-                    | (F.col("__new").isNotNull() & (F.col("__new") < F.col("__old")))
+        # r13 optimization round — DELTA relaxation (the queue form of
+        # Bellman–Ford): a node's cost can only improve through a
+        # neighbor whose cost improved LAST round (an unimproved
+        # neighbor's offers were already on the table the round they
+        # first appeared and lost to the standing minimum), so each round
+        # relaxes only from the previous round's improved set instead of
+        # the whole distance table.  Round 1's "improved set" is the seed
+        # table itself — identical to the non-delta round 1 — and the
+        # frontier shrinks geometrically as regions settle; results are
+        # bit-identical, the early-exit condition is unchanged.
+        frontier = dist
+        for _ in range(max_hops):
+            # relax as a full-outer join against the candidate minima —
+            # equivalent to min over (dist ∪ cand) per node, but the form
+            # exposes a per-node `improved` flag that rides the checkpoint
+            # job as an Observation: one job per round, no separate probe
+            candmin = (
+                e.join(frontier.withColumnRenamed("node", "u"), "u")
+                .select(
+                    F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("__new")
                 )
-                .cast("long")
-                .alias("__chg"),
+                .groupBy("node")
+                .agg(F.min("__new").alias("__new"))
             )
-            .observe(obs, F.sum("__chg").alias("__n_improved"))
-            .localCheckpoint(eager=True)
-        )
-        improved = int(obs.get["__n_improved"] or 0) > 0
-        # dist is a .select() wrapper from the previous round — release
-        # must target the checkpointed generation behind it (the
-        # _ckpt_handle), not the Project node, or the unpersist no-ops
-        # and generations pile up past the two-generation bound
-        _release_local_checkpoint(getattr(dist, "_ckpt_handle", dist))
-        dist = nxt.select("node", "cost")
-        dist._ckpt_handle = nxt
-        frontier = nxt.filter(F.col("__chg") == 1).select("node", "cost")
-        if not improved:
-            break
-    result = dist
-    result._cc_final_generation = e
-    # the final distance generation backs the result itself; its
-    # _ckpt_handle routes the release through the same hook
-    result._extra_ckpts = [dist]
-    result._cc_checkpoint_dir = None
-    return result
+            obs = Observation()
+            nxt = ms.checkpoint(
+                dist.withColumnRenamed("cost", "__old")
+                .join(candmin, "node", "full_outer")
+                .select(
+                    "node",
+                    F.least(F.col("__old"), F.col("__new")).alias("cost"),
+                    (
+                        F.col("__old").isNull()
+                        | (F.col("__new").isNotNull() & (F.col("__new") < F.col("__old")))
+                    )
+                    .cast("long")
+                    .alias("__chg"),
+                )
+                .observe(obs, F.sum("__chg").alias("__n_improved"))
+            )
+            improved = int(obs.get["__n_improved"] or 0) > 0
+            ms.release(gen)
+            gen = nxt
+            dist = nxt.select("node", "cost")
+            frontier = nxt.filter(F.col("__chg") == 1).select("node", "cost")
+            if not improved:
+                break
+        return ms.attach(dist)
 
 
 def label_spreading(
@@ -1184,49 +928,40 @@ def label_spreading(
     storage stays bounded at two generations.  Release with
     ``release_components``.
     """
-    # NOTE (r13 optimization round): a u-keyed pre-partitioned
-    # checkpoint (_ckpt_keyed) measured NO gain — the label table is
-    # node-sized, AQE broadcast-joins it each round and e never
-    # re-shuffles; keep the plain checkpoint.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
-    sd = (
-        seeds.select(F.col(node_col).alias("node"), F.col(label_col).alias("label"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    lab = sd
-    for _ in range(rounds):
-        counts = (
-            e.join(lab.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
+    with materialize.scope() as ms:
+        # NOTE (r13 optimization round): a u-keyed pre-partitioned
+        # checkpoint (repartition+sort, checkpointed with AQE off)
+        # measured NO gain — the label table is node-sized, AQE
+        # broadcast-joins it each round and e never re-shuffles; keep the
+        # plain checkpoint.
+        e = ms.checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+        sd = ms.checkpoint(
+            seeds.select(F.col(node_col).alias("node"), F.col(label_col).alias("label"))
+            .distinct()
         )
-        picked = (
-            counts.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("label").alias("l"))
-                ).alias("s")
+        lab = sd
+        for _ in range(rounds):
+            counts = (
+                e.join(lab.withColumnRenamed("node", "u"), "u")
+                .groupBy(F.col("v").alias("node"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-            .select("node", F.col("s.l").alias("label"))
-        )
-        nxt = (
-            sd.unionAll(picked.join(sd.select("node"), "node", "left_anti"))
-            .localCheckpoint(eager=True)
-        )
-        if lab is not sd:
-            _release_local_checkpoint(lab)
-        lab = nxt
-    result = lab
-    result._cc_final_generation = e
-    # seeds table and the final label generation stay pinned past the
-    # loop; release_components walks _extra_ckpts, so route both
-    # through it (lab IS the result — released only after consumption)
-    result._extra_ckpts = [sd, lab] if lab is not sd else [sd]
-    result._cc_checkpoint_dir = None
-    return result
+            picked = (
+                counts.groupBy("node")
+                .agg(
+                    F.min(
+                        F.struct((-F.col("c")).alias("nc"), F.col("label").alias("l"))
+                    ).alias("s")
+                )
+                .select("node", F.col("s.l").alias("label"))
+            )
+            nxt = ms.checkpoint(
+                sd.unionAll(picked.join(sd.select("node"), "node", "left_anti"))
+            )
+            if lab is not sd:
+                ms.release(lab)
+            lab = nxt
+        return ms.attach(lab)
 
 
 def personalized_pagerank(
@@ -1257,60 +992,53 @@ def personalized_pagerank(
     exact-shape oracle (float last-ulp caveat as for pagerank).
     Release with ``release_components``.
     """
-    a, b = F.col(src), F.col(dst)
-    # unrolled lazy recurrence — same reasoning as pagerank: AQE's
-    # runtime broadcast conversion beats static co-partitioning here
-    sym = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionAll(
-            edges.select(b.alias("u"), a.alias("v")).filter(
-                F.col("u") != F.col("v")
+    with materialize.scope() as ms:
+        a, b = F.col(src), F.col(dst)
+        # unrolled lazy recurrence — same reasoning as pagerank: AQE's
+        # runtime broadcast conversion beats static co-partitioning here
+        sym = ms.checkpoint(
+            edges.select(a.alias("u"), b.alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .unionAll(
+                edges.select(b.alias("u"), a.alias("v")).filter(
+                    F.col("u") != F.col("v")
+                )
             )
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=True
-    )
-    n_seeds = seeds.select(F.col(node_col)).distinct().agg(
-        F.count(F.lit(1)).alias("__ns")
-    )
-    seedw = (
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .crossJoin(F.broadcast(n_seeds))
-        .select("node", (F.lit(1.0) / F.col("__ns")).alias("__sm"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = seedw.select("node", F.col("__sm").alias("r"))
-    for _ in range(iterations):
-        contrib = (
-            sym.join(
-                deg.join(ranks.withColumnRenamed("node", "u"), "u"), "u"
-            )
-            .select(
-                F.col("v").alias("node"), (F.col("r") / F.col("deg")).alias("__c")
-            )
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
+        deg = ms.checkpoint(sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
+        n_seeds = seeds.select(F.col(node_col)).distinct().agg(
+            F.count(F.lit(1)).alias("__ns")
         )
-        ranks = (
-            contrib.join(seedw, "node", "full_outer")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.coalesce(F.col("__sm"), F.lit(0.0))
-                    + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))
-                ).alias("r"),
-            )
+        seedw = ms.checkpoint(
+            seeds.select(F.col(node_col).alias("node"))
+            .distinct()
+            .crossJoin(F.broadcast(n_seeds))
+            .select("node", (F.lit(1.0) / F.col("__ns")).alias("__sm"))
         )
-    result = ranks.select("node", F.round("r", 6).alias("score"))
-    result._cc_final_generation = sym
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = [deg, seedw]
-    return result
+        ranks = seedw.select("node", F.col("__sm").alias("r"))
+        for _ in range(iterations):
+            contrib = (
+                sym.join(
+                    deg.join(ranks.withColumnRenamed("node", "u"), "u"), "u"
+                )
+                .select(
+                    F.col("v").alias("node"), (F.col("r") / F.col("deg")).alias("__c")
+                )
+                .groupBy("node")
+                .agg(F.sum("__c").alias("__s"))
+            )
+            ranks = (
+                contrib.join(seedw, "node", "full_outer")
+                .select(
+                    "node",
+                    (
+                        F.lit(1.0 - damping) * F.coalesce(F.col("__sm"), F.lit(0.0))
+                        + F.lit(damping) * F.coalesce(F.col("__s"), F.lit(0.0))
+                    ).alias("r"),
+                )
+            )
+        return ms.attach(ranks.select("node", F.round("r", 6).alias("score")))
 
 
 def neighbor_jaccard(
@@ -1350,61 +1078,57 @@ def neighbor_jaccard(
     n_common, jaccard)`` with ``u < v``, jaccard rounded to 6
     decimals.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # NOTE (r13 optimization round): a v-keyed pre-partitioned
-    # checkpoint (_ckpt_keyed) measured ~1.5x SLOWER here — the wedge
-    # self-join's two sides are byte-identical exchange subtrees that
-    # runtime exchange reuse already collapses to ONE shuffle, with
-    # AQE free to coalesce; the forced static-partition SMJ gave that
-    # up and paid an extra repartition+sort at build.  Keep the plain
-    # checkpoint.
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ckpts = [sym]
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    if max_degree is not None:
-        keep = deg.filter(F.col("deg") <= max_degree).select("u")
-        sym = (
-            sym.join(F.broadcast(keep), "u")
-            .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+    with materialize.scope() as ms:
+        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        # NOTE (r13 optimization round): a v-keyed pre-partitioned
+        # checkpoint (repartition+sort, checkpointed with AQE off)
+        # measured ~1.5x SLOWER here — the wedge self-join's two sides are
+        # byte-identical exchange subtrees that runtime exchange reuse
+        # already collapses to ONE shuffle, with AQE free to coalesce; the
+        # forced static-partition SMJ gave that up and paid an extra
+        # repartition+sort at build.  Keep the plain checkpoint.
+        sym = ms.checkpoint(
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        # the pre-prune table is only needed to build the pruned one —
-        # free it NOW rather than carrying it to release time
-        _release_local_checkpoint(ckpts.pop())
-        ckpts.append(sym)
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    wedges = (
-        sym.select(F.col("v").alias("w"), F.col("u").alias("a"))
-        .join(sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w")
-        .filter(F.col("a") < F.col("b"))
-    )
-    common = wedges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).alias("n_common")
-    ).filter(F.col("n_common") >= min_common)
-    da = deg.select(F.col("u").alias("a"), F.col("deg").alias("__da"))
-    db = deg.select(F.col("u").alias("b"), F.col("deg").alias("__db"))
-    result = (
-        common.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            "n_common",
-            F.round(
-                F.col("n_common")
-                / (F.col("__da") + F.col("__db") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+        if max_degree is not None:
+            keep = deg.filter(F.col("deg") <= max_degree).select("u")
+            full, sym = sym, ms.checkpoint(
+                sym.join(F.broadcast(keep), "u")
+                .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
+                .select("u", "v")
+            )
+            # the pre-prune table is only needed to build the pruned one —
+            # free it NOW rather than carrying it to release time
+            ms.release(full)
+            deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        wedges = (
+            sym.select(F.col("v").alias("w"), F.col("u").alias("a"))
+            .join(sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w")
+            .filter(F.col("a") < F.col("b"))
         )
-    )
-    result._extra_ckpts = ckpts
-    return result
+        common = wedges.groupBy("a", "b").agg(
+            F.count(F.lit(1)).alias("n_common")
+        ).filter(F.col("n_common") >= min_common)
+        da = deg.select(F.col("u").alias("a"), F.col("deg").alias("__da"))
+        db = deg.select(F.col("u").alias("b"), F.col("deg").alias("__db"))
+        result = (
+            common.join(da, "a")
+            .join(db, "b")
+            .select(
+                F.col("a").alias("u"),
+                F.col("b").alias("v"),
+                "n_common",
+                F.round(
+                    F.col("n_common")
+                    / (F.col("__da") + F.col("__db") - F.col("n_common")),
+                    6,
+                ).alias("jaccard"),
+            )
+        )
+        return ms.attach(result)
 
 
 def adamic_adar(
@@ -1436,59 +1160,55 @@ def adamic_adar(
     ``(u, v, n_common, aa_score)`` with ``u < v``, score rounded to
     6 decimals.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # plain checkpoint — same measurement as neighbor_jaccard: the
-    # wedge join's identical exchange subtrees are runtime-reused, a
-    # forced static partitioning was ~1.5x slower
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ckpts = [sym]
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    if max_degree is not None:
-        keep = deg.filter(F.col("deg") <= max_degree).select("u")
-        sym = (
-            sym.join(F.broadcast(keep), "u")
-            .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+    with materialize.scope() as ms:
+        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        # plain checkpoint — same measurement as neighbor_jaccard: the
+        # wedge join's identical exchange subtrees are runtime-reused, a
+        # forced static partitioning was ~1.5x slower
+        sym = ms.checkpoint(
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
-        _release_local_checkpoint(ckpts.pop())
-        ckpts.append(sym)
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # center-keyed edge list carrying the center's ln-degree weight.
-    # Degree-1 centers can't form wedges — drop them BEFORE the weight
-    # so 1/ln(1) never evaluates (ANSI mode raises DIVIDE_BY_ZERO; the
-    # filter also shrinks the wedge join's build side)
-    wdeg = deg.filter(F.col("deg") >= 2).select(
-        F.col("u").alias("w"),
-        (F.lit(1.0) / F.log(F.col("deg").cast("double"))).alias("__w"),
-    )
-    centered = sym.select(F.col("v").alias("w"), F.col("u").alias("a")).join(
-        wdeg, "w"
-    )
-    wedges = centered.join(
-        sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w"
-    ).filter(F.col("a") < F.col("b"))
-    result = (
-        wedges.groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.sum("__w").alias("__aa"),
+        if max_degree is not None:
+            keep = deg.filter(F.col("deg") <= max_degree).select("u")
+            full, sym = sym, ms.checkpoint(
+                sym.join(F.broadcast(keep), "u")
+                .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
+                .select("u", "v")
+            )
+            ms.release(full)
+            deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        # center-keyed edge list carrying the center's ln-degree weight.
+        # Degree-1 centers can't form wedges — drop them BEFORE the weight
+        # so 1/ln(1) never evaluates (ANSI mode raises DIVIDE_BY_ZERO; the
+        # filter also shrinks the wedge join's build side)
+        wdeg = deg.filter(F.col("deg") >= 2).select(
+            F.col("u").alias("w"),
+            (F.lit(1.0) / F.log(F.col("deg").cast("double"))).alias("__w"),
         )
-        .filter(F.col("n_common") >= min_common)
-        .select(
-            F.col("a").alias("u"),
-            F.col("b").alias("v"),
-            "n_common",
-            F.round(F.col("__aa"), 6).alias("aa_score"),
+        centered = sym.select(F.col("v").alias("w"), F.col("u").alias("a")).join(
+            wdeg, "w"
         )
-    )
-    result._extra_ckpts = ckpts
-    return result
+        wedges = centered.join(
+            sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w"
+        ).filter(F.col("a") < F.col("b"))
+        result = (
+            wedges.groupBy("a", "b")
+            .agg(
+                F.count(F.lit(1)).alias("n_common"),
+                F.sum("__w").alias("__aa"),
+            )
+            .filter(F.col("n_common") >= min_common)
+            .select(
+                F.col("a").alias("u"),
+                F.col("b").alias("v"),
+                "n_common",
+                F.round(F.col("__aa"), 6).alias("aa_score"),
+            )
+        )
+        return ms.attach(result)
 
 
 def clustering_coefficient(
@@ -1510,43 +1230,38 @@ def clustering_coefficient(
     ``(node, deg, n_triangles, coeff)`` with coeff rounded to 6
     decimals.
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    tri = triangle_counts(e, "a", "b")
-    # triangle_counts checkpoints ITS canonical copy of e; chain both
-    # handles so one release call frees everything
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    result = deg.join(tri, "node", "left").select(
-        "node",
-        "deg",
-        F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
-        F.when(F.col("deg") < 2, F.lit(0.0))
-        .otherwise(
-            F.round(
-                2.0
-                * F.coalesce(F.col("n_triangles"), F.lit(0))
-                / (F.col("deg") * (F.col("deg") - F.lit(1))),
-                6,
+    with materialize.scope() as ms:
+        a, b = F.col(src), F.col(dst)
+        e = ms.checkpoint(
+            edges.select(
+                F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
             )
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-        .alias("coeff"),
-    )
-    result._cc_final_generation = getattr(tri, "_cc_final_generation", None)
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = [e]
-    return result
+        tri = ms.hold(triangle_counts(e, "a", "b"))
+        deg = (
+            e.select(F.col("a").alias("node"))
+            .unionAll(e.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        result = deg.join(tri, "node", "left").select(
+            "node",
+            "deg",
+            F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
+            F.when(F.col("deg") < 2, F.lit(0.0))
+            .otherwise(
+                F.round(
+                    2.0
+                    * F.coalesce(F.col("n_triangles"), F.lit(0))
+                    / (F.col("deg") * (F.col("deg") - F.lit(1))),
+                    6,
+                )
+            )
+            .alias("coeff"),
+        )
+        return ms.attach(result)
 
 
 def contract_edges(
@@ -1659,63 +1374,59 @@ def hits(
     side ∈ {'hub','auth'} and score rounded to 6; nodes with no
     out-edges (resp. in-edges) carry no hub (resp. auth) row.
     """
-    # NOTE (r13 optimization round): a pre-partitioned two-copy edge
-    # checkpoint (u-keyed + v-keyed, exchange-free SMJs) was measured
-    # at 2.5x SLOWER here — this unrolled LAZY recurrence runs as one
-    # adaptive query, where AQE runtime-converts every half-step join
-    # to broadcast-hash (score sides are node-sized) and reuses the
-    # edge exchanges, beating static co-partitioning; forcing 32-
-    # static-partition SMJs disabled both.  Keep the single
-    # unpartitioned checkpoint and let AQE plan the joins.
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hub = e.select("u").distinct().select("u", F.lit(1.0).alias("h"))
-    auth = None
-    # HITS is LINEAR, so the per-half-step L1 norms are pure scalar
-    # factors that cancel when normalizing at the end — mathematically
-    # identical scores, but each intermediate is referenced exactly
-    # ONCE (a norm inside the loop would double plan references per
-    # half-step: 2^(2·iters) evaluations of the edge join).  Raw
-    # values grow like (mean degree)²·ᵏ — ~1e33 at web scale for
-    # k = 3, far inside double range.
-    for _ in range(iterations):
-        auth = (
-            e.join(hub, "u")
-            .groupBy("v")
-            .agg(F.sum("h").alias("a"))
+    with materialize.scope() as ms:
+        # NOTE (r13 optimization round): a pre-partitioned two-copy edge
+        # checkpoint (u-keyed + v-keyed, exchange-free SMJs) was measured
+        # at 2.5x SLOWER here — this unrolled LAZY recurrence runs as one
+        # adaptive query, where AQE runtime-converts every half-step join
+        # to broadcast-hash (score sides are node-sized) and reuses the
+        # edge exchanges, beating static co-partitioning; forcing 32-
+        # static-partition SMJs disabled both.  Keep the single
+        # unpartitioned checkpoint and let AQE plan the joins.
+        e = ms.checkpoint(
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .distinct()
         )
-        hub = (
-            e.join(auth, "v")
-            .groupBy("u")
-            .agg(F.sum("a").alias("h"))
+        hub = e.select("u").distinct().select("u", F.lit(1.0).alias("h"))
+        auth = None
+        # HITS is LINEAR, so the per-half-step L1 norms are pure scalar
+        # factors that cancel when normalizing at the end — mathematically
+        # identical scores, but each intermediate is referenced exactly
+        # ONCE (a norm inside the loop would double plan references per
+        # half-step: 2^(2·iters) evaluations of the edge join).  Raw
+        # values grow like (mean degree)²·ᵏ — ~1e33 at web scale for
+        # k = 3, far inside double range.
+        for _ in range(iterations):
+            auth = (
+                e.join(hub, "u")
+                .groupBy("v")
+                .agg(F.sum("h").alias("a"))
+            )
+            hub = (
+                e.join(auth, "v")
+                .groupBy("u")
+                .agg(F.sum("a").alias("h"))
+            )
+        nh = hub.agg(F.sum("h").alias("__nh"))
+        na = auth.agg(F.sum("a").alias("__na"))
+        hub = hub.crossJoin(F.broadcast(nh)).select(
+            "u", (F.col("h") / F.col("__nh")).alias("h")
         )
-    nh = hub.agg(F.sum("h").alias("__nh"))
-    na = auth.agg(F.sum("a").alias("__na"))
-    hub = hub.crossJoin(F.broadcast(nh)).select(
-        "u", (F.col("h") / F.col("__nh")).alias("h")
-    )
-    auth = auth.crossJoin(F.broadcast(na)).select(
-        "v", (F.col("a") / F.col("__na")).alias("a")
-    )
-    result = hub.select(
-        F.col("u").alias("node"),
-        F.lit("hub").alias("side"),
-        F.round("h", 6).alias("score"),
-    ).unionAll(
-        auth.select(
-            F.col("v").alias("node"),
-            F.lit("auth").alias("side"),
-            F.round("a", 6).alias("score"),
+        auth = auth.crossJoin(F.broadcast(na)).select(
+            "v", (F.col("a") / F.col("__na")).alias("a")
         )
-    )
-    result._cc_final_generation = e
-    result._persisted_intermediates = []
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = []
-    return result
+        result = hub.select(
+            F.col("u").alias("node"),
+            F.lit("hub").alias("side"),
+            F.round("h", 6).alias("score"),
+        ).unionAll(
+            auth.select(
+                F.col("v").alias("node"),
+                F.lit("auth").alias("side"),
+                F.round("a", 6).alias("score"),
+            )
+        )
+        return ms.attach(result)
 
 
 def degree_assortativity(
@@ -1748,49 +1459,48 @@ def degree_assortativity(
 
     Returns one row: (n_nodes, n_directed_edges, assortativity).
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    sym = (
-        e.select("u", "v")
-        .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    du = deg.select(F.col("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dv"))
-    pairs = sym.join(du, "u").join(dv, "v")
-    x = F.col("du").cast("decimal(38,0)")
-    y = F.col("dv").cast("decimal(38,0)")
-    tot = pairs.groupBy().agg(
-        F.count(F.lit(1)).alias("n_directed_edges"),
-        F.sum(x).alias("__sx"),
-        F.sum(y).alias("__sy"),
-        F.sum(x * y).alias("__sxy"),
-        F.sum(x * x).alias("__sx2"),
-        F.sum(y * y).alias("__sy2"),
-    )
-    n_nodes = deg.groupBy().agg(F.count(F.lit(1)).alias("n_nodes"))
-    joined = tot.crossJoin(F.broadcast(n_nodes))
-    n = F.col("n_directed_edges").cast("double")
-    sx = F.col("__sx").cast("double")
-    sy = F.col("__sy").cast("double")
-    sxy = F.col("__sxy").cast("double")
-    sx2 = F.col("__sx2").cast("double")
-    sy2 = F.col("__sy2").cast("double")
-    num = n * sxy - sx * sy
-    den2 = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
-    r = F.when(den2 > 0, num / F.sqrt(den2))
-    result = joined.select(
-        "n_nodes",
-        "n_directed_edges",
-        F.round(r, 6).alias("assortativity"),
-    )
-    result._extra_ckpts = [sym]
-    return result
+    with materialize.scope() as ms:
+        e = (
+            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+            .filter(F.col("u") != F.col("v"))
+        )
+        sym = ms.checkpoint(
+            e.select("u", "v")
+            .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .distinct()
+        )
+        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+        du = deg.select(F.col("u"), F.col("d").alias("du"))
+        dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dv"))
+        pairs = sym.join(du, "u").join(dv, "v")
+        x = F.col("du").cast("decimal(38,0)")
+        y = F.col("dv").cast("decimal(38,0)")
+        tot = pairs.groupBy().agg(
+            F.count(F.lit(1)).alias("n_directed_edges"),
+            F.sum(x).alias("__sx"),
+            F.sum(y).alias("__sy"),
+            F.sum(x * y).alias("__sxy"),
+            F.sum(x * x).alias("__sx2"),
+            F.sum(y * y).alias("__sy2"),
+        )
+        n_nodes = deg.groupBy().agg(F.count(F.lit(1)).alias("n_nodes"))
+        joined = tot.crossJoin(F.broadcast(n_nodes))
+        n = F.col("n_directed_edges").cast("double")
+        sx = F.col("__sx").cast("double")
+        sy = F.col("__sy").cast("double")
+        sxy = F.col("__sxy").cast("double")
+        sx2 = F.col("__sx2").cast("double")
+        sy2 = F.col("__sy2").cast("double")
+        num = n * sxy - sx * sy
+        den2 = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
+        r = F.when(den2 > 0, num / F.sqrt(den2))
+        result = joined.select(
+            "n_nodes",
+            "n_directed_edges",
+            F.round(r, 6).alias("assortativity"),
+        )
+        return ms.attach(result)
 
 
 def harmonic_centrality(
@@ -1832,125 +1542,120 @@ def harmonic_centrality(
     at least one source at distance >= 1 (sources do not score
     themselves; unreached node/source pairs contribute 0 by absence).
     """
-    from functools import reduce as _reduce
-    from operator import or_ as _or
+    with materialize.scope() as ms:
+        from functools import reduce as _reduce
+        from operator import or_ as _or
 
-    a, b = F.col(src), F.col(dst)
-    e0 = edges.select(a.alias("u"), b.alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    # plain eager checkpoint — the keyed partition-preserving form was
-    # measured ~1.3x slower here and reverted (see docstring)
-    sym = (
-        e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Observation, Window
-
-    # deterministic bit index per distinct source (the sample is a
-    # bounded input by contract, so the k-row global window is fine)
-    idx = (
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .select(
-            "node",
-            (F.row_number().over(Window.orderBy("node")) - 1).alias("__i"),
+        a, b = F.col(src), F.col(dst)
+        e0 = edges.select(a.alias("u"), b.alias("v")).filter(
+            F.col("u") != F.col("v")
         )
-        .localCheckpoint(eager=True)
-    )
-    # control-plane scalar (sample-sized): fixes the mask width
-    k = idx.count()
-    nw = max(1, (k + 63) // 64)
-    # NB: F.shiftleft takes a literal int shift — the per-row shift
-    # needs the SQL form
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__i % 64 AS INT))")
-
-    def word(w: int) -> F.Column:
-        return F.when(
-            (F.col("__i") / 64).cast("int") == w, bit
-        ).otherwise(F.lit(0).cast("long"))
-
-    # state: per node the already-seen source mask, the fresh-frontier
-    # mask, and the running (n_sources, harmonic) accumulators
-    state = idx.select(
-        "node",
-        *[word(w).alias(f"__s{w}") for w in range(nw)],
-        *[word(w).alias(f"__f{w}") for w in range(nw)],
-        F.lit(0).cast("long").alias("n_sources"),
-        F.lit(0.0).alias("harmonic"),
-    ).localCheckpoint(eager=True)
-    _release_local_checkpoint(idx)
-    for h in range(1, max_hops + 1):
-        frontier = state.filter(
-            _reduce(_or, [F.col(f"__f{w}") != 0 for w in range(nw)])
-        ).select(
-            F.col("node").alias("u"),
-            *[F.col(f"__f{w}") for w in range(nw)],
+        # plain eager checkpoint — the keyed partition-preserving form was
+        # measured ~1.3x slower here and reverted (see docstring)
+        sym = ms.checkpoint(
+            e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .distinct()
         )
-        cand = (
-            sym.join(frontier, "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(
-                *[
-                    F.bit_or(F.col(f"__f{w}")).alias(f"__c{w}")
-                    for w in range(nw)
-                ]
+        from pyspark.sql import Observation, Window
+
+        # deterministic bit index per distinct source (the sample is a
+        # bounded input by contract, so the k-row global window is fine)
+        idx = ms.checkpoint(
+            sources.select(F.col(node_col).alias("node"))
+            .distinct()
+            .select(
+                "node",
+                (F.row_number().over(Window.orderBy("node")) - 1).alias("__i"),
             )
         )
-        merged = state.join(cand, "node", "full_outer").select(
-            "node",
-            *[
-                (
-                    F.coalesce(F.col(f"__c{w}"), F.lit(0)).bitwiseAND(
-                        F.bitwise_not(
-                            F.coalesce(F.col(f"__s{w}"), F.lit(0))
-                        )
-                    )
-                ).alias(f"__n{w}")
-                for w in range(nw)
-            ],
-            *[F.coalesce(F.col(f"__s{w}"), F.lit(0)).alias(f"__s{w}") for w in range(nw)],
-            F.coalesce(F.col("n_sources"), F.lit(0)).alias("n_sources"),
-            F.coalesce(F.col("harmonic"), F.lit(0.0)).alias("harmonic"),
+        # control-plane scalar (sample-sized): fixes the mask width
+        k = idx.count()
+        nw = max(1, (k + 63) // 64)
+        # NB: F.shiftleft takes a literal int shift — the per-row shift
+        # needs the SQL form
+        bit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__i % 64 AS INT))")
+
+        def word(w: int) -> F.Column:
+            return F.when(
+                (F.col("__i") / 64).cast("int") == w, bit
+            ).otherwise(F.lit(0).cast("long"))
+
+        # state: per node the already-seen source mask, the fresh-frontier
+        # mask, and the running (n_sources, harmonic) accumulators
+        state = gen = ms.checkpoint(
+            idx.select(
+                "node",
+                *[word(w).alias(f"__s{w}") for w in range(nw)],
+                *[word(w).alias(f"__f{w}") for w in range(nw)],
+                F.lit(0).cast("long").alias("n_sources"),
+                F.lit(0.0).alias("harmonic"),
+            )
         )
-        popc = _reduce(
-            lambda x, y: x + y,
-            [F.bit_count(F.col(f"__n{w}")) for w in range(nw)],
-        ).cast("long")
-        obs = Observation()
-        nxt = (
-            merged.select(
+        ms.release(idx)
+        for h in range(1, max_hops + 1):
+            frontier = state.filter(
+                _reduce(_or, [F.col(f"__f{w}") != 0 for w in range(nw)])
+            ).select(
+                F.col("node").alias("u"),
+                *[F.col(f"__f{w}") for w in range(nw)],
+            )
+            cand = (
+                sym.join(frontier, "u")
+                .groupBy(F.col("v").alias("node"))
+                .agg(
+                    *[
+                        F.bit_or(F.col(f"__f{w}")).alias(f"__c{w}")
+                        for w in range(nw)
+                    ]
+                )
+            )
+            merged = state.join(cand, "node", "full_outer").select(
                 "node",
                 *[
-                    F.col(f"__s{w}")
-                    .bitwiseOR(F.col(f"__n{w}"))
-                    .alias(f"__s{w}")
+                    (
+                        F.coalesce(F.col(f"__c{w}"), F.lit(0)).bitwiseAND(
+                            F.bitwise_not(
+                                F.coalesce(F.col(f"__s{w}"), F.lit(0))
+                            )
+                        )
+                    ).alias(f"__n{w}")
                     for w in range(nw)
                 ],
-                *[F.col(f"__n{w}").alias(f"__f{w}") for w in range(nw)],
-                (F.col("n_sources") + popc).alias("n_sources"),
-                (
-                    F.col("harmonic")
-                    + popc.cast("double") / F.lit(float(h))
-                ).alias("harmonic"),
-                popc.alias("__new"),
+                *[F.coalesce(F.col(f"__s{w}"), F.lit(0)).alias(f"__s{w}") for w in range(nw)],
+                F.coalesce(F.col("n_sources"), F.lit(0)).alias("n_sources"),
+                F.coalesce(F.col("harmonic"), F.lit(0.0)).alias("harmonic"),
             )
-            .observe(obs, F.sum("__new").alias("__nf"))
-            .localCheckpoint(eager=True)
+            popc = _reduce(
+                lambda x, y: x + y,
+                [F.bit_count(F.col(f"__n{w}")) for w in range(nw)],
+            ).cast("long")
+            obs = Observation()
+            nxt = ms.checkpoint(
+                merged.select(
+                    "node",
+                    *[
+                        F.col(f"__s{w}")
+                        .bitwiseOR(F.col(f"__n{w}"))
+                        .alias(f"__s{w}")
+                        for w in range(nw)
+                    ],
+                    *[F.col(f"__n{w}").alias(f"__f{w}") for w in range(nw)],
+                    (F.col("n_sources") + popc).alias("n_sources"),
+                    (
+                        F.col("harmonic")
+                        + popc.cast("double") / F.lit(float(h))
+                    ).alias("harmonic"),
+                    popc.alias("__new"),
+                )
+                .observe(obs, F.sum("__new").alias("__nf"))
+            )
+            settled = int(obs.get["__nf"] or 0) == 0
+            ms.release(gen)
+            gen = nxt
+            state = nxt.drop("__new")
+            if settled:
+                break
+        result = state.filter(F.col("n_sources") > 0).select(
+            "node", "n_sources", F.round("harmonic", 6).alias("harmonic")
         )
-        settled = int(obs.get["__nf"] or 0) == 0
-        # state may be a .drop() wrapper from the previous round —
-        # release the checkpointed generation behind it
-        _release_local_checkpoint(getattr(state, "_ckpt_handle", state))
-        state = nxt.drop("__new")
-        state._ckpt_handle = nxt
-        if settled:
-            break
-    result = state.filter(F.col("n_sources") > 0).select(
-        "node", "n_sources", F.round("harmonic", 6).alias("harmonic")
-    )
-    result._cc_final_generation = sym
-    result._extra_ckpts = [state]
-    result._cc_checkpoint_dir = None
-    return result
+        return ms.attach(result)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..functions import prefix_path
 
 
@@ -129,7 +130,7 @@ def bom_rollup(
     O(d²) re-scans of the caller's edge build.  Quantities ride as
     DECIMAL(38,0) products of integer per-unit counts — exact at any
     depth that fits 38 digits.  Call
-    ``graph.release_components(result)`` after consuming to free the
+    ``release_components(result)`` after consuming to free the
     checkpointed level blocks.
 
     Returns (root, component, total_qty) for every component strictly
@@ -137,56 +138,55 @@ def bom_rollup(
     """
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
-    e = edges.select(
-        F.col(parent_col).alias("__p"),
-        F.col(child_col).alias("__c"),
-        F.col(qty_col).cast("decimal(38,0)").alias("__q"),
-    ).localCheckpoint(eager=True)
-    frontier = roots.select(
-        F.col(root_col).alias("__root"),
-        F.col(root_col).alias("__node"),
-        F.lit(1).cast("decimal(38,0)").alias("__mult"),
-    )
-    ckpts = [e]
-    steps = []
-    from pyspark.sql import Observation
-
-    for _ in range(max_depth):
-        # the emptiness probe rides the checkpoint job as an
-        # Observation (the bfs_distances trick) so frontier
-        # exhaustion stops the loop without a second job per level
-        obs = Observation()
-        step = (
-            frontier.join(e, frontier["__node"] == e["__p"])
-            .select(
-                "__root",
-                F.col("__c").alias("__node"),
-                (F.col("__mult") * F.col("__q")).alias("__mult"),
+    with materialize.scope() as ms:
+        e = ms.checkpoint(
+            edges.select(
+                F.col(parent_col).alias("__p"),
+                F.col(child_col).alias("__c"),
+                F.col(qty_col).cast("decimal(38,0)").alias("__q"),
             )
-            .groupBy("__root", "__node")
-            .agg(F.sum("__mult").alias("__mult"))
-            .observe(obs, F.count(F.lit(1)).alias("__n"))
-            .localCheckpoint(eager=True)
         )
-        if int(obs.get["__n"] or 0) == 0:
-            break
-        ckpts.append(step)
-        steps.append(step)
-        frontier = step
-    if not steps:
-        # no root has any children: empty result with the right schema
-        steps = [frontier.limit(0)]
-    total = steps[0]
-    for step in steps[1:]:
-        total = total.unionAll(step)
-    result = (
-        total.groupBy("__root", "__node")
-        .agg(F.sum("__mult").alias("total_qty"))
-        .select(
-            F.col("__root").alias("root"),
-            F.col("__node").alias("component"),
-            F.col("total_qty").cast("long").alias("total_qty"),
+        frontier = roots.select(
+            F.col(root_col).alias("__root"),
+            F.col(root_col).alias("__node"),
+            F.lit(1).cast("decimal(38,0)").alias("__mult"),
         )
-    )
-    result._extra_ckpts = ckpts
-    return result
+        steps = []
+        from pyspark.sql import Observation
+
+        for _ in range(max_depth):
+            # the emptiness probe rides the checkpoint job as an
+            # Observation (the bfs_distances trick) so frontier
+            # exhaustion stops the loop without a second job per level
+            obs = Observation()
+            step = ms.checkpoint(
+                frontier.join(e, frontier["__node"] == e["__p"])
+                .select(
+                    "__root",
+                    F.col("__c").alias("__node"),
+                    (F.col("__mult") * F.col("__q")).alias("__mult"),
+                )
+                .groupBy("__root", "__node")
+                .agg(F.sum("__mult").alias("__mult"))
+                .observe(obs, F.count(F.lit(1)).alias("__n"))
+            )
+            if int(obs.get["__n"] or 0) == 0:
+                break
+            steps.append(step)
+            frontier = step
+        if not steps:
+            # no root has any children: empty result with the right schema
+            steps = [frontier.limit(0)]
+        total = steps[0]
+        for step in steps[1:]:
+            total = total.unionAll(step)
+        result = (
+            total.groupBy("__root", "__node")
+            .agg(F.sum("__mult").alias("total_qty"))
+            .select(
+                F.col("__root").alias("root"),
+                F.col("__node").alias("component"),
+                F.col("total_qty").cast("long").alias("total_qty"),
+            )
+        )
+        return ms.attach(result)

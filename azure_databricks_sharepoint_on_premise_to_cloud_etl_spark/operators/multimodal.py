@@ -946,8 +946,3 @@ def decode_image_stub(payload: bytes):  # pragma: no cover - documented stub
         "natively (decode_bmp / decode_jpeg), other formats are "
         "exercised via extract_meta's deterministic fake decoder"
     )
-
-
-def frame_sample_stub(payload: bytes, every_n: int = 30):  # pragma: no cover
-    """Video frame-sampling entry point — stub, as above."""
-    raise NotImplementedError("video decode not available in this container")

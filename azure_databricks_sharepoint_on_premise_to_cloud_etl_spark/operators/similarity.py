@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<float/double> columns, in double."""
@@ -910,173 +912,175 @@ def mmr_rerank(
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam {lam} outside [0, 1]")
     q, c = query_col, id_col
-    cand = candidates.select(
-        F.col(q).alias("__q"),
-        F.col(c).alias("__c"),
-        F.col(emb_col).alias("__e"),
-        F.round(F.col(rel_col), 6).alias("__r"),
-    ).localCheckpoint(eager=True)
-    a = cand.select(
-        "__q", F.col("__c").alias("__a"), F.col("__e").alias("__ea")
-    )
-    # disjoint column names on the probe side: a checkpointed frame
-    # self-joined on a shared name trips the ambiguous-self-join check
-    b = cand.select(
-        F.col("__q").alias("__qb"),
-        F.col("__c").alias("__b"),
-        F.col("__e").alias("__eb"),
-    )
-    # __rn/__sn: NULL-vs-NaN disambiguation for the Arrow hop (pandas
-    # folds both into NaN in a float64 column; Spark orders NULL last
-    # and NaN greatest-first under desc, so the distinction matters)
-    sims = (
-        a.join(b, F.col("__q") == F.col("__qb"))
-        .filter(F.col("__a") != F.col("__b"))
-        .select(
-            "__q",
-            "__a",
-            "__b",
-            F.round(cosine_sim(F.col("__ea"), F.col("__eb")), 6).alias(
-                "__s"
-            ),
-        )
-        .withColumn(
-            "__sn", F.coalesce(F.isnan("__s"), F.lit(False))
-        )
-    )
-    # __qr, not __q: the cogroup's two children both descend from the
-    # checkpointed cand, and a shared attribute would trip the
-    # ambiguous-self-join check (cogroup keys match positionally, so
-    # the names may differ)
-    rel = cand.select(
-        F.col("__q").alias("__qr"),
-        "__c",
-        "__r",
-        F.coalesce(F.isnan("__r"), F.lit(False)).alias("__rn"),
-    )
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(query_col, candidates.schema[query_col].dataType),
-            StructField("rank", IntegerType()),
-            StructField(id_col, candidates.schema[id_col].dataType),
-            StructField("mmr_score", DoubleType()),
-        ]
-    )
-    lam_f = float(lam)
-    one_m = 1.0 - lam_f
-    kk = int(k)
-
-    def _greedy(sims_pdf, rel_pdf):
-        # Per-query greedy MMR, replicating the JVM sequential form
-        # bit for bit: Spark round(x, 6) on DOUBLE is
-        # BigDecimal.valueOf(x).setScale(6, HALF_UP) — Decimal(repr(x))
-        # parses the same shortest decimal Double.toString produces,
-        # so quantize(HALF_UP) yields the same double.  Ordering
-        # replicates desc_nulls_last with Spark's NaN-greatest
-        # semantics; ties break by id ascending (__c asc).
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import pandas as pd
-
-        if len(rel_pdf) == 0:
-            return pd.DataFrame(
-                {query_col: [], "rank": [], id_col: [], "mmr_score": []}
+    with materialize.scope() as ms:
+        cand = ms.checkpoint(
+            candidates.select(
+                F.col(q).alias("__q"),
+                F.col(c).alias("__c"),
+                F.col(emb_col).alias("__e"),
+                F.round(F.col(rel_col), 6).alias("__r"),
             )
+        )
+        a = cand.select(
+            "__q", F.col("__c").alias("__a"), F.col("__e").alias("__ea")
+        )
+        # disjoint column names on the probe side: a checkpointed frame
+        # self-joined on a shared name trips the ambiguous-self-join check
+        b = cand.select(
+            F.col("__q").alias("__qb"),
+            F.col("__c").alias("__b"),
+            F.col("__e").alias("__eb"),
+        )
+        # __rn/__sn: NULL-vs-NaN disambiguation for the Arrow hop (pandas
+        # folds both into NaN in a float64 column; Spark orders NULL last
+        # and NaN greatest-first under desc, so the distinction matters)
+        sims = (
+            a.join(b, F.col("__q") == F.col("__qb"))
+            .filter(F.col("__a") != F.col("__b"))
+            .select(
+                "__q",
+                "__a",
+                "__b",
+                F.round(cosine_sim(F.col("__ea"), F.col("__eb")), 6).alias(
+                    "__s"
+                ),
+            )
+            .withColumn(
+                "__sn", F.coalesce(F.isnan("__s"), F.lit(False))
+            )
+        )
+        # __qr, not __q: the cogroup's two children both descend from the
+        # checkpointed cand, and a shared attribute would trip the
+        # ambiguous-self-join check (cogroup keys match positionally, so
+        # the names may differ)
+        rel = cand.select(
+            F.col("__q").alias("__qr"),
+            "__c",
+            "__r",
+            F.coalesce(F.isnan("__r"), F.lit(False)).alias("__rn"),
+        )
 
-        def round6(x):
-            if x is None:
-                return None
-            x = float(x)
-            if math.isnan(x) or math.isinf(x):
-                return x
-            return float(
-                Decimal(repr(x)).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
+        from pyspark.sql.types import (
+            DoubleType,
+            IntegerType,
+            StructField,
+            StructType,
+        )
+
+        out_schema = StructType(
+            [
+                StructField(query_col, candidates.schema[query_col].dataType),
+                StructField("rank", IntegerType()),
+                StructField(id_col, candidates.schema[id_col].dataType),
+                StructField("mmr_score", DoubleType()),
+            ]
+        )
+        lam_f = float(lam)
+        one_m = 1.0 - lam_f
+        kk = int(k)
+
+        def _greedy(sims_pdf, rel_pdf):
+            # Per-query greedy MMR, replicating the JVM sequential form
+            # bit for bit: Spark round(x, 6) on DOUBLE is
+            # BigDecimal.valueOf(x).setScale(6, HALF_UP) — Decimal(repr(x))
+            # parses the same shortest decimal Double.toString produces,
+            # so quantize(HALF_UP) yields the same double.  Ordering
+            # replicates desc_nulls_last with Spark's NaN-greatest
+            # semantics; ties break by id ascending (__c asc).
+            import math
+            from decimal import ROUND_HALF_UP, Decimal
+
+            import pandas as pd
+
+            if len(rel_pdf) == 0:
+                return pd.DataFrame(
+                    {query_col: [], "rank": [], id_col: [], "mmr_score": []}
                 )
+
+            def round6(x):
+                if x is None:
+                    return None
+                x = float(x)
+                if math.isnan(x) or math.isinf(x):
+                    return x
+                return float(
+                    Decimal(repr(x)).quantize(
+                        Decimal("0.000001"), rounding=ROUND_HALF_UP
+                    )
+                )
+
+            def sort_key(cid, v):
+                # (nulls last, NaN greatest-first under desc, value desc,
+                # id asc)
+                if v is None:
+                    return (1, 0.0, cid)
+                v = float(v)
+                if math.isnan(v):
+                    return (0, float("-inf"), cid)
+                return (0, -v, cid)
+
+            qval = rel_pdf["__qr"].iloc[0]
+            ids = list(rel_pdf["__c"])
+            rels = [
+                (float("nan") if nan else None)
+                if pd.isna(v)
+                else float(v)
+                for v, nan in zip(rel_pdf["__r"], rel_pdf["__rn"])
+            ]
+            rel_map = dict(zip(ids, rels))
+            sim_to = {}
+            for aa, bb, ss, nan in zip(
+                sims_pdf["__a"],
+                sims_pdf["__b"],
+                sims_pdf["__s"],
+                sims_pdf["__sn"],
+            ):
+                # NULL sims never contribute (max ignores NULL); NaN sims
+                # do, and NaN is the greatest value under Spark's max
+                if not pd.isna(ss):
+                    sim_to.setdefault(aa, {})[bb] = float(ss)
+                elif nan:
+                    sim_to.setdefault(aa, {})[bb] = float("nan")
+            remaining = set(ids)
+            selected = []
+            rows = []
+            for i in range(1, min(kk, len(ids)) + 1):
+                if not remaining:
+                    break  # duplicate-id candidate rows exhaust early
+                if i == 1:
+                    scored = [(cid, rel_map[cid]) for cid in remaining]
+                else:
+                    scored = []
+                    for cid in remaining:
+                        r = rel_map[cid]
+                        row = sim_to.get(cid, {})
+                        pen = [
+                            row[s] for s in selected if row.get(s) is not None
+                        ]
+                        if any(math.isnan(x) for x in pen):
+                            p = float("nan")  # Spark max: NaN is greatest
+                        else:
+                            p = max(pen) if pen else 0.0
+                        score = (
+                            None
+                            if r is None
+                            else round6(lam_f * r - one_m * p)
+                        )
+                        scored.append((cid, score))
+                cid, sc = min(scored, key=lambda t: sort_key(t[0], t[1]))
+                rows.append((qval, i, cid, sc))
+                remaining.discard(cid)
+                selected.append(cid)
+            return pd.DataFrame(
+                rows, columns=[query_col, "rank", id_col, "mmr_score"]
             )
 
-        def sort_key(cid, v):
-            # (nulls last, NaN greatest-first under desc, value desc,
-            # id asc)
-            if v is None:
-                return (1, 0.0, cid)
-            v = float(v)
-            if math.isnan(v):
-                return (0, float("-inf"), cid)
-            return (0, -v, cid)
-
-        qval = rel_pdf["__qr"].iloc[0]
-        ids = list(rel_pdf["__c"])
-        rels = [
-            (float("nan") if nan else None)
-            if pd.isna(v)
-            else float(v)
-            for v, nan in zip(rel_pdf["__r"], rel_pdf["__rn"])
-        ]
-        rel_map = dict(zip(ids, rels))
-        sim_to = {}
-        for aa, bb, ss, nan in zip(
-            sims_pdf["__a"],
-            sims_pdf["__b"],
-            sims_pdf["__s"],
-            sims_pdf["__sn"],
-        ):
-            # NULL sims never contribute (max ignores NULL); NaN sims
-            # do, and NaN is the greatest value under Spark's max
-            if not pd.isna(ss):
-                sim_to.setdefault(aa, {})[bb] = float(ss)
-            elif nan:
-                sim_to.setdefault(aa, {})[bb] = float("nan")
-        remaining = set(ids)
-        selected = []
-        rows = []
-        for i in range(1, min(kk, len(ids)) + 1):
-            if not remaining:
-                break  # duplicate-id candidate rows exhaust early
-            if i == 1:
-                scored = [(cid, rel_map[cid]) for cid in remaining]
-            else:
-                scored = []
-                for cid in remaining:
-                    r = rel_map[cid]
-                    row = sim_to.get(cid, {})
-                    pen = [
-                        row[s] for s in selected if row.get(s) is not None
-                    ]
-                    if any(math.isnan(x) for x in pen):
-                        p = float("nan")  # Spark max: NaN is greatest
-                    else:
-                        p = max(pen) if pen else 0.0
-                    score = (
-                        None
-                        if r is None
-                        else round6(lam_f * r - one_m * p)
-                    )
-                    scored.append((cid, score))
-            cid, sc = min(scored, key=lambda t: sort_key(t[0], t[1]))
-            rows.append((qval, i, cid, sc))
-            remaining.discard(cid)
-            selected.append(cid)
-        return pd.DataFrame(
-            rows, columns=[query_col, "rank", id_col, "mmr_score"]
+        result = (
+            sims.groupby("__q")
+            .cogroup(rel.groupby("__qr"))
+            .applyInPandas(_greedy, schema=out_schema)
         )
-
-    result = (
-        sims.groupby("__q")
-        .cogroup(rel.groupby("__qr"))
-        .applyInPandas(_greedy, schema=out_schema)
-    )
-    result._extra_ckpts = [cand]
-    return result
+        return ms.attach(result)
 
 
 def rbo_overlap(

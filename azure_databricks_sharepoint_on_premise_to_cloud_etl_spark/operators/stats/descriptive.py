@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ... import materialize
+
 
 def group_percentiles_exact(
     df: DataFrame,
@@ -1726,27 +1728,25 @@ def abc_classification(
         F.round(F.col(value_col).cast("double"), value_round).alias("value"),
     )
     order = [F.col("value").desc(), F.col("key").asc()]
-    run = global_cumsum(
-        vals, order, {"value": "__cum"}, partitions=partitions
-    )
-    total = vals.agg(F.sum("value").alias("__total"))
-    out = run.crossJoin(F.broadcast(total))
-    share = F.when(
-        F.col("__total") > 0, F.col("__cum") / F.col("__total")
-    )
-    out = out.select(
-        "key",
-        "value",
-        F.round(share, 6).alias("cum_share"),
-        F.when(share <= a_cut, F.lit("A"))
-        .when(share <= b_cut, F.lit("B"))
-        .otherwise(F.lit("C"))
-        .alias("abc_class"),
-    )
-    out._persisted_intermediates = getattr(
-        run, "_persisted_intermediates", []
-    )
-    return out
+    with materialize.scope() as ms:
+        run = ms.hold(
+            global_cumsum(vals, order, {"value": "__cum"}, partitions=partitions)
+        )
+        total = vals.agg(F.sum("value").alias("__total"))
+        out = run.crossJoin(F.broadcast(total))
+        share = F.when(
+            F.col("__total") > 0, F.col("__cum") / F.col("__total")
+        )
+        out = out.select(
+            "key",
+            "value",
+            F.round(share, 6).alias("cum_share"),
+            F.when(share <= a_cut, F.lit("A"))
+            .when(share <= b_cut, F.lit("B"))
+            .otherwise(F.lit("C"))
+            .alias("abc_class"),
+        )
+        return ms.attach(out)
 
 
 def robust_zscore_anomalies(
@@ -2080,42 +2080,42 @@ def lorenz_deciles(
         F.col(key_col).alias("__k"),
         F.round(F.col(value_col).cast("double"), value_round).alias("__v"),
     )
-    tiled = global_ntile_pct(
-        vals,
-        [F.col("__v").asc(), F.col("__k").asc()],
-        k,
-        tile_col="tile",
-        partitions=partitions,
-    )
-    per_tile = tiled.groupBy("tile").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.round(F.sum("__v"), value_round).alias("tile_value"),
-    )
-    total = F.sum("tile_value").over(Window.partitionBy())
-    w_cum = Window.orderBy("tile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    share = F.when(
-        F.col("__total") > 0, F.col("tile_value") / F.col("__total")
-    )
-    cum = F.when(
-        F.col("__total") > 0, F.col("__cum") / F.col("__total")
-    )
-    out = (
-        per_tile.withColumn("__total", total)
-        .withColumn("__cum", F.sum("tile_value").over(w_cum))
-        .select(
-            "tile",
-            "n_members",
-            "tile_value",
-            F.round(share, 6).alias("tile_share"),
-            F.round(cum, 6).alias("cum_share"),
+    with materialize.scope() as ms:
+        tiled = ms.hold(
+            global_ntile_pct(
+                vals,
+                [F.col("__v").asc(), F.col("__k").asc()],
+                k,
+                tile_col="tile",
+                partitions=partitions,
+            )
         )
-    )
-    out._persisted_intermediates = getattr(
-        tiled, "_persisted_intermediates", []
-    )
-    return out
+        per_tile = tiled.groupBy("tile").agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.round(F.sum("__v"), value_round).alias("tile_value"),
+        )
+        total = F.sum("tile_value").over(Window.partitionBy())
+        w_cum = Window.orderBy("tile").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        share = F.when(
+            F.col("__total") > 0, F.col("tile_value") / F.col("__total")
+        )
+        cum = F.when(
+            F.col("__total") > 0, F.col("__cum") / F.col("__total")
+        )
+        out = (
+            per_tile.withColumn("__total", total)
+            .withColumn("__cum", F.sum("tile_value").over(w_cum))
+            .select(
+                "tile",
+                "n_members",
+                "tile_value",
+                F.round(share, 6).alias("tile_share"),
+                F.round(cum, 6).alias("cum_share"),
+            )
+        )
+        return ms.attach(out)
 
 
 def quantile_normalize(
@@ -2199,74 +2199,73 @@ def spearman_corr(
     Returns one row per group: (group, n, rho).
     """
     g = F.col(group_col)
-    # The filtered 3-column base feeds THREE consumers (both rank-
-    # bucket aggregates and the rank-attach join): materialize it once
-    # (eager localCheckpoint) instead of re-scanning + re-repartition-
-    # ing the source per consumer — the r13 before-plan showed 3 full
-    # parquet scans each behind its own round-robin Exchange (guide
-    # §1.2: don't compute things twice).  Narrow projection first so
-    # the checkpoint holds 3 columns, not the row.
-    base = (
-        df.filter(
-            g.isNotNull()
-            & F.col(x_col).isNotNull()
-            & F.col(y_col).isNotNull()
+    with materialize.scope() as ms:
+        # The filtered 3-column base feeds THREE consumers (both rank-
+        # bucket aggregates and the rank-attach join): materialize it once
+        # (eager localCheckpoint) instead of re-scanning + re-repartition-
+        # ing the source per consumer — the r13 before-plan showed 3 full
+        # parquet scans each behind its own round-robin Exchange (guide
+        # §1.2: don't compute things twice).  Narrow projection first so
+        # the checkpoint holds 3 columns, not the row.
+        base = ms.checkpoint(
+            df.filter(
+                g.isNotNull()
+                & F.col(x_col).isNotNull()
+                & F.col(y_col).isNotNull()
+            )
+            .select(
+                g.alias("__g"),
+                F.col(x_col).alias("__x"),
+                F.col(y_col).alias("__y"),
+            )
         )
-        .select(
-            g.alias("__g"),
-            F.col(x_col).alias("__x"),
-            F.col(y_col).alias("__y"),
-        )
-        .localCheckpoint(eager=True)
-    )
 
-    def _ranks(col: str, out: str) -> DataFrame:
-        buckets = base.groupBy("__g", col).agg(
-            F.count(F.lit(1)).alias("__t")
-        )
-        w = (
-            Window.partitionBy("__g")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        # doubled average rank = 2*cum - (t - 1) -> always an integer
-        dbl = 2 * F.sum("__t").over(w) - (F.col("__t") - 1)
-        return buckets.select("__g", col, dbl.alias(out))
+        def _ranks(col: str, out: str) -> DataFrame:
+            buckets = base.groupBy("__g", col).agg(
+                F.count(F.lit(1)).alias("__t")
+            )
+            w = (
+                Window.partitionBy("__g")
+                .orderBy(col)
+                .rowsBetween(Window.unboundedPreceding, 0)
+            )
+            # doubled average rank = 2*cum - (t - 1) -> always an integer
+            dbl = 2 * F.sum("__t").over(w) - (F.col("__t") - 1)
+            return buckets.select("__g", col, dbl.alias(out))
 
-    ranked = base.join(_ranks("__x", "__rx"), ["__g", "__x"]).join(
-        _ranks("__y", "__ry"), ["__g", "__y"]
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 - local alias
-    moments = ranked.groupBy("__g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col("__rx"))).alias("__sx"),
-        F.sum(dec(F.col("__ry"))).alias("__sy"),
-        F.sum(dec(F.col("__rx") * F.col("__rx"))).alias("__sxx"),
-        F.sum(dec(F.col("__ry") * F.col("__ry"))).alias("__syy"),
-        F.sum(dec(F.col("__rx") * F.col("__ry"))).alias("__sxy"),
-    )
-    # every exact decimal sum casts to double FIRST, then all
-    # arithmetic runs in IEEE doubles — the oracle does literally the
-    # same ops, so both engines round identically above 2^53
-    n = F.col("n").cast("double")
-    sx = F.col("__sx").cast("double")
-    sy = F.col("__sy").cast("double")
-    sxx = F.col("__sxx").cast("double")
-    syy = F.col("__syy").cast("double")
-    sxy = F.col("__sxy").cast("double")
-    cov = n * sxy - sx * sy
-    vx = n * sxx - sx * sx
-    vy = n * syy - sy * sy
-    rho = F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
-    result = moments.select(
-        F.col("__g").alias(group_col),
-        "n",
-        F.round(rho, 6).alias("rho"),
-    )
-    # the checkpointed base backs the whole plan; bench/batch callers
-    # free it via release_components after consuming
-    result._extra_ckpts = [base]
-    return result
+        ranked = base.join(_ranks("__x", "__rx"), ["__g", "__x"]).join(
+            _ranks("__y", "__ry"), ["__g", "__y"]
+        )
+        dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 - local alias
+        moments = ranked.groupBy("__g").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(dec(F.col("__rx"))).alias("__sx"),
+            F.sum(dec(F.col("__ry"))).alias("__sy"),
+            F.sum(dec(F.col("__rx") * F.col("__rx"))).alias("__sxx"),
+            F.sum(dec(F.col("__ry") * F.col("__ry"))).alias("__syy"),
+            F.sum(dec(F.col("__rx") * F.col("__ry"))).alias("__sxy"),
+        )
+        # every exact decimal sum casts to double FIRST, then all
+        # arithmetic runs in IEEE doubles — the oracle does literally the
+        # same ops, so both engines round identically above 2^53
+        n = F.col("n").cast("double")
+        sx = F.col("__sx").cast("double")
+        sy = F.col("__sy").cast("double")
+        sxx = F.col("__sxx").cast("double")
+        syy = F.col("__syy").cast("double")
+        sxy = F.col("__sxy").cast("double")
+        cov = n * sxy - sx * sy
+        vx = n * sxx - sx * sx
+        vy = n * syy - sy * sy
+        rho = F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
+        result = moments.select(
+            F.col("__g").alias(group_col),
+            "n",
+            F.round(rho, 6).alias("rho"),
+        )
+        # the checkpointed base backs the whole plan; bench/batch callers
+        # free it via release_components after consuming
+        return ms.attach(result)
 
 
 def anova_f(df: DataFrame, value_col: str, group_col: str) -> DataFrame:

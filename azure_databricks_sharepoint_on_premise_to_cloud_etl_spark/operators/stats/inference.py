@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ... import materialize
+
 from .descriptive import (
     _LEHMER_M,
     _NORM_B,
@@ -1192,88 +1194,87 @@ def mann_kendall(
     Returns one row per group: (group, n, s_stat, var_s, z).
     """
     g = F.col(group_col)
-    # r13 optimization round: pts (the bounded, pre-aggregated series)
-    # is referenced FOUR times (both pair-join sides, n, ties) — each
-    # reference re-ran the caller's corpus-collapsing aggregate.  One
-    # eager checkpoint of the series-grain table replaces four corpus
-    # passes (guide §1.2: don't compute things twice); callers release
-    # via release_components.
-    pts = (
-        df.filter(
-            g.isNotNull()
-            & F.col(time_col).isNotNull()
-            & F.col(value_col).isNotNull()
+    with materialize.scope() as ms:
+        # r13 optimization round: pts (the bounded, pre-aggregated series)
+        # is referenced FOUR times (both pair-join sides, n, ties) — each
+        # reference re-ran the caller's corpus-collapsing aggregate.  One
+        # eager checkpoint of the series-grain table replaces four corpus
+        # passes (guide §1.2: don't compute things twice); callers release
+        # via release_components.
+        pts = ms.checkpoint(
+            df.filter(
+                g.isNotNull()
+                & F.col(time_col).isNotNull()
+                & F.col(value_col).isNotNull()
+            )
+            .select(
+                g.alias("__g"),
+                F.col(time_col).alias("__t"),
+                F.col(value_col).cast("double").alias("__v"),
+            )
         )
-        .select(
-            g.alias("__g"),
-            F.col(time_col).alias("__t"),
-            F.col(value_col).cast("double").alias("__v"),
+        lhs = pts.select(
+            F.col("__g"), F.col("__t").alias("__t1"), F.col("__v").alias("__v1")
         )
-        .localCheckpoint(eager=True)
-    )
-    lhs = pts.select(
-        F.col("__g"), F.col("__t").alias("__t1"), F.col("__v").alias("__v1")
-    )
-    rhs = pts.select(
-        F.col("__g"), F.col("__t").alias("__t2"), F.col("__v").alias("__v2")
-    )
-    pairs = lhs.join(rhs, "__g").filter(F.col("__t1") < F.col("__t2"))
-    s_df = pairs.groupBy("__g").agg(
-        F.sum(
-            F.signum(F.col("__v2") - F.col("__v1")).cast("long")
-        ).alias("s_stat")
-    )
-    n_df = pts.groupBy("__g").agg(F.count(F.lit(1)).alias("n"))
-    ties = (
-        pts.groupBy("__g", "__v")
-        .agg(F.count(F.lit(1)).alias("__t"))
-        .groupBy("__g")
-        .agg(
+        rhs = pts.select(
+            F.col("__g"), F.col("__t").alias("__t2"), F.col("__v").alias("__v2")
+        )
+        pairs = lhs.join(rhs, "__g").filter(F.col("__t1") < F.col("__t2"))
+        s_df = pairs.groupBy("__g").agg(
             F.sum(
-                F.col("__t")
-                * (F.col("__t") - 1)
-                * (2 * F.col("__t") + 5)
-            ).alias("__tie_sum")
+                F.signum(F.col("__v2") - F.col("__v1")).cast("long")
+            ).alias("s_stat")
         )
-    )
-    m = (
-        n_df.join(s_df, "__g", "left")
-        .join(ties, "__g", "left")
-        .select(
-            F.col("__g").alias("grp"),
-            "n",
-            F.coalesce(F.col("s_stat"), F.lit(0)).alias("s_stat"),
-            F.round(
-                (
-                    F.col("n").cast("double")
-                    * (F.col("n") - 1)
-                    * (2 * F.col("n") + 5)
-                    - F.coalesce(F.col("__tie_sum"), F.lit(0)).cast(
-                        "double"
+        n_df = pts.groupBy("__g").agg(F.count(F.lit(1)).alias("n"))
+        ties = (
+            pts.groupBy("__g", "__v")
+            .agg(F.count(F.lit(1)).alias("__t"))
+            .groupBy("__g")
+            .agg(
+                F.sum(
+                    F.col("__t")
+                    * (F.col("__t") - 1)
+                    * (2 * F.col("__t") + 5)
+                ).alias("__tie_sum")
+            )
+        )
+        m = (
+            n_df.join(s_df, "__g", "left")
+            .join(ties, "__g", "left")
+            .select(
+                F.col("__g").alias("grp"),
+                "n",
+                F.coalesce(F.col("s_stat"), F.lit(0)).alias("s_stat"),
+                F.round(
+                    (
+                        F.col("n").cast("double")
+                        * (F.col("n") - 1)
+                        * (2 * F.col("n") + 5)
+                        - F.coalesce(F.col("__tie_sum"), F.lit(0)).cast(
+                            "double"
+                        )
                     )
-                )
-                / 18.0,
-                6,
-            ).alias("var_s"),
+                    / 18.0,
+                    6,
+                ).alias("var_s"),
+            )
         )
-    )
-    s = F.col("s_stat").cast("double")
-    z = F.when(
-        (F.col("var_s") > 0) & (s > 0),
-        (s - 1) / F.sqrt(F.col("var_s")),
-    ).when(
-        (F.col("var_s") > 0) & (s < 0),
-        (s + 1) / F.sqrt(F.col("var_s")),
-    ).when(F.col("var_s") > 0, F.lit(0.0))
-    result = m.select(
-        F.col("grp").alias(group_col),
-        "n",
-        "s_stat",
-        "var_s",
-        F.round(z, 4).alias("z"),
-    )
-    result._extra_ckpts = [pts]
-    return result
+        s = F.col("s_stat").cast("double")
+        z = F.when(
+            (F.col("var_s") > 0) & (s > 0),
+            (s - 1) / F.sqrt(F.col("var_s")),
+        ).when(
+            (F.col("var_s") > 0) & (s < 0),
+            (s + 1) / F.sqrt(F.col("var_s")),
+        ).when(F.col("var_s") > 0, F.lit(0.0))
+        result = m.select(
+            F.col("grp").alias(group_col),
+            "n",
+            "s_stat",
+            "var_s",
+            F.round(z, 4).alias("z"),
+        )
+        return ms.attach(result)
 
 
 def page_hinkley(
@@ -4079,48 +4080,46 @@ def cronbach_alpha(
         .filter((F.col("__ki") == k) & (F.col("__ni") == k))
         .select("__subj")
     )
-    scored = base.join(ok, s == F.col("__subj"), "inner").localCheckpoint(
-        eager=True
-    )
-    n_total = int(obs.get["__n_total"] or 0)
-    item_var = (
-        scored.groupBy(it.alias("__item"))
-        .agg(F.round(F.var_samp(x), 6).alias("__v"))
-        .agg(
-            F.round(F.sum("__v"), 6).alias("sum_item_var"),
+    with materialize.scope() as ms:
+        scored = ms.checkpoint(base.join(ok, s == F.col("__subj"), "inner"))
+        n_total = int(obs.get["__n_total"] or 0)
+        item_var = (
+            scored.groupBy(it.alias("__item"))
+            .agg(F.round(F.var_samp(x), 6).alias("__v"))
+            .agg(
+                F.round(F.sum("__v"), 6).alias("sum_item_var"),
+            )
         )
-    )
-    totals = (
-        scored.groupBy("__subj")
-        .agg(F.sum(x).alias("__tot"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_subjects"),
-            F.round(F.var_samp("__tot"), 6).alias("total_var"),
+        totals = (
+            scored.groupBy("__subj")
+            .agg(F.sum(x).alias("__tot"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_subjects"),
+                F.round(F.var_samp("__tot"), 6).alias("total_var"),
+            )
         )
-    )
-    combined = totals.crossJoin(F.broadcast(item_var)).select(
-        "n_subjects", "sum_item_var", "total_var"
-    )
-    alpha = F.when(
-        F.col("total_var") > 0,
-        F.round(
-            F.lit(float(k) / (k - 1))
-            * (1.0 - F.col("sum_item_var") / F.col("total_var")),
-            6,
-        ),
-    )
-    result = combined.select(
-        "n_subjects",
-        (F.lit(int(n_total)) - F.col("n_subjects"))
-        .cast("long")
-        .alias("n_excluded_subjects"),
-        F.lit(k).cast("long").alias("k"),
-        "sum_item_var",
-        "total_var",
-        alpha.alias("alpha"),
-    )
-    result._extra_ckpts = [scored]
-    return result
+        combined = totals.crossJoin(F.broadcast(item_var)).select(
+            "n_subjects", "sum_item_var", "total_var"
+        )
+        alpha = F.when(
+            F.col("total_var") > 0,
+            F.round(
+                F.lit(float(k) / (k - 1))
+                * (1.0 - F.col("sum_item_var") / F.col("total_var")),
+                6,
+            ),
+        )
+        result = combined.select(
+            "n_subjects",
+            (F.lit(int(n_total)) - F.col("n_subjects"))
+            .cast("long")
+            .alias("n_excluded_subjects"),
+            F.lit(k).cast("long").alias("k"),
+            "sum_item_var",
+            "total_var",
+            alpha.alias("alpha"),
+        )
+        return ms.attach(result)
 
 
 def wilcoxon_signed_rank(
@@ -4619,36 +4618,35 @@ def seasonal_mann_kendall(
             F.month(F.col(time_col)).cast("string"),
         ),
     )
-    per_season = mann_kendall(staged, "__gs", time_col, value_col)
-    parts = F.split(F.col("__gs"), sep)
-    red = (
-        per_season.select(
-            parts.getItem(0).alias("__grp"),
-            "n",
-            "s_stat",
-            "var_s",
+    with materialize.scope() as ms:
+        per_season = ms.hold(mann_kendall(staged, "__gs", time_col, value_col))
+        parts = F.split(F.col("__gs"), sep)
+        red = (
+            per_season.select(
+                parts.getItem(0).alias("__grp"),
+                "n",
+                "s_stat",
+                "var_s",
+            )
+            .groupBy(F.col("__grp").alias(group_col))
+            .agg(
+                F.sum("n").cast("long").alias("n"),
+                F.count(F.lit(1)).cast("long").alias("n_seasons"),
+                F.sum("s_stat").cast("long").alias("s_stat"),
+                F.round(F.sum("var_s"), 6).alias("var_s"),
+            )
         )
-        .groupBy(F.col("__grp").alias(group_col))
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.count(F.lit(1)).cast("long").alias("n_seasons"),
-            F.sum("s_stat").cast("long").alias("s_stat"),
-            F.round(F.sum("var_s"), 6).alias("var_s"),
+        s = F.col("s_stat")
+        sd = F.sqrt(F.col("var_s"))
+        z = F.when(F.col("var_s") <= 0, None).otherwise(
+            F.when(s > 0, F.round((s - 1) / sd, 6))
+            .when(s < 0, F.round((s + 1) / sd, 6))
+            .otherwise(F.lit(0.0))
         )
-    )
-    s = F.col("s_stat")
-    sd = F.sqrt(F.col("var_s"))
-    z = F.when(F.col("var_s") <= 0, None).otherwise(
-        F.when(s > 0, F.round((s - 1) / sd, 6))
-        .when(s < 0, F.round((s + 1) / sd, 6))
-        .otherwise(F.lit(0.0))
-    )
-    result = red.select(
-        group_col, "n", "n_seasons", "s_stat", "var_s", z.alias("z")
-    )
-    # propagate the delegate's checkpoint handle so callers can free it
-    result._extra_ckpts = getattr(per_season, "_extra_ckpts", [])
-    return result
+        result = red.select(
+            group_col, "n", "n_seasons", "s_stat", "var_s", z.alias("z")
+        )
+        return ms.attach(result)
 
 
 def neyman_allocation(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..functions import portable_hash64, word_tokens
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -303,92 +304,94 @@ def remove_repeated_ngrams(
     """
     from pyspark import StorageLevel
 
-    toked = docs.select(
-        F.col(id_col), word_tokens(text_col).alias("__toks")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    gram_digest = lambda i: portable_hash64(  # noqa: E731
-        F.array_join(F.slice(F.col("__toks"), i + 1, n), " ")
-    )
-    gram_rows = toked.withColumn(
-        "__grams",
-        F.when(
-            F.size("__toks") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n), gram_digest
-            ),
-        ).otherwise(F.array().cast("array<long>")),
-    ).select(id_col, F.posexplode("__grams").alias("pos", "__gh"))
-    heavy = (
-        gram_rows.select(id_col, "__gh")
-        .distinct()
-        .groupBy("__gh")
-        .agg(F.count(F.lit(1)).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
-        .select("__gh")
-    )
-    starts = (
-        gram_rows.join(heavy, "__gh", "left_semi")
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_set("pos")).alias("__starts"))
-    )
-    # Fold the ascending starts into disjoint [b, e) cover intervals.
-    # Fixed width n means an overlapping start s (s < last.e) always
-    # extends the open interval to s + n; a gap starts a new one.
-    iv_type = "array<struct<b:int,e:int>>"
-    intervals = F.aggregate(
-        F.col("__starts"),
-        F.array().cast(iv_type),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0) & (s < F.element_at(acc, -1).getField("e")),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.struct(
-                        F.element_at(acc, -1).getField("b").alias("b"),
-                        (s + n).alias("e"),
-                    )
+    with materialize.scope() as ms:
+        toked = ms.hold(
+            docs.select(
+                F.col(id_col), word_tokens(text_col).alias("__toks")
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        gram_digest = lambda i: portable_hash64(  # noqa: E731
+            F.array_join(F.slice(F.col("__toks"), i + 1, n), " ")
+        )
+        gram_rows = toked.withColumn(
+            "__grams",
+            F.when(
+                F.size("__toks") >= n,
+                F.transform(
+                    F.sequence(F.lit(0), F.size("__toks") - n), gram_digest
                 ),
+            ).otherwise(F.array().cast("array<long>")),
+        ).select(id_col, F.posexplode("__grams").alias("pos", "__gh"))
+        heavy = (
+            gram_rows.select(id_col, "__gh")
+            .distinct()
+            .groupBy("__gh")
+            .agg(F.count(F.lit(1)).alias("__nd"))
+            .filter(F.col("__nd") >= min_docs)
+            .select("__gh")
+        )
+        starts = (
+            gram_rows.join(heavy, "__gh", "left_semi")
+            .groupBy(id_col)
+            .agg(F.sort_array(F.collect_set("pos")).alias("__starts"))
+        )
+        # Fold the ascending starts into disjoint [b, e) cover intervals.
+        # Fixed width n means an overlapping start s (s < last.e) always
+        # extends the open interval to s + n; a gap starts a new one.
+        iv_type = "array<struct<b:int,e:int>>"
+        intervals = F.aggregate(
+            F.col("__starts"),
+            F.array().cast(iv_type),
+            lambda acc, s: F.when(
+                (F.size(acc) > 0) & (s < F.element_at(acc, -1).getField("e")),
+                F.concat(
+                    F.slice(acc, 1, F.size(acc) - 1),
+                    F.array(
+                        F.struct(
+                            F.element_at(acc, -1).getField("b").alias("b"),
+                            (s + n).alias("e"),
+                        )
+                    ),
+                ),
+            ).otherwise(
+                F.concat(acc, F.array(F.struct(s.alias("b"), (s + n).alias("e"))))
             ),
-        ).otherwise(
-            F.concat(acc, F.array(F.struct(s.alias("b"), (s + n).alias("e"))))
-        ),
-    )
-    # Survivors = the gap slices between intervals: [0, b1), [e1, b2),
-    # ..., [e_last, len).  slice() with zero length is an empty array,
-    # so back-to-back intervals cost nothing.
-    ivs = F.col("__ivs")
-    gap_b = F.concat(
-        F.array(F.lit(0)), F.transform(ivs, lambda it: it.getField("e"))
-    )
-    gap_e = F.concat(
-        F.transform(ivs, lambda it: it.getField("b")),
-        F.array(F.size("__toks")),
-    )
-    kept = F.flatten(
-        F.zip_with(
-            gap_b,
-            gap_e,
-            lambda a, b: F.slice(
-                F.col("__toks"), a + 1, F.greatest(b - a, F.lit(0))
-            ),
         )
-    )
-    result = (
-        toked.join(starts, id_col, "left")
-        .withColumn(
-            "__starts",
-            F.coalesce(F.col("__starts"), F.array().cast("array<int>")),
+        # Survivors = the gap slices between intervals: [0, b1), [e1, b2),
+        # ..., [e_last, len).  slice() with zero length is an empty array,
+        # so back-to-back intervals cost nothing.
+        ivs = F.col("__ivs")
+        gap_b = F.concat(
+            F.array(F.lit(0)), F.transform(ivs, lambda it: it.getField("e"))
         )
-        .withColumn("__ivs", intervals)
-        .select(
-            id_col,
-            F.size("__toks").alias("n_tokens"),
-            (F.size("__toks") - F.size(kept)).alias("n_removed"),
-            F.array_join(kept, " ").alias("cleaned_text"),
+        gap_e = F.concat(
+            F.transform(ivs, lambda it: it.getField("b")),
+            F.array(F.size("__toks")),
         )
-    )
-    result._persisted_intermediates = [toked]
-    return result
+        kept = F.flatten(
+            F.zip_with(
+                gap_b,
+                gap_e,
+                lambda a, b: F.slice(
+                    F.col("__toks"), a + 1, F.greatest(b - a, F.lit(0))
+                ),
+            )
+        )
+        result = (
+            toked.join(starts, id_col, "left")
+            .withColumn(
+                "__starts",
+                F.coalesce(F.col("__starts"), F.array().cast("array<int>")),
+            )
+            .withColumn("__ivs", intervals)
+            .select(
+                id_col,
+                F.size("__toks").alias("n_tokens"),
+                (F.size("__toks") - F.size(kept)).alias("n_removed"),
+                F.array_join(kept, " ").alias("cleaned_text"),
+            )
+        )
+        return ms.attach(result)
 
 
 def bpe_merge_step(
@@ -880,36 +883,101 @@ def tfidf_doc_similarity(
     )
     from pyspark import StorageLevel
 
-    # PERSIST the weighted posting table: both sides of the pair join
-    # read it, and without materialization the tokenize/gram/df
-    # pipeline executes twice (measured 8.7s -> the recompute is about
-    # half).  Spillable MEMORY_AND_DISK costs roughly one banded-
-    # posting copy of executor storage; release via
-    # graph.release_components(result) after consuming the result.
-    w = (
-        td.join(dfreq, "__t")
-        .select(
-            id_col,
-            "__t",
-            (F.col("__tf") * F.log(F.col("__nd") / F.col("__df"))).alias(
-                "__w"
-            ),
+    with materialize.scope() as ms:
+        # PERSIST the weighted posting table: both sides of the pair join
+        # read it, and without materialization the tokenize/gram/df
+        # pipeline executes twice (measured 8.7s -> the recompute is about
+        # half).  Spillable MEMORY_AND_DISK costs roughly one banded-
+        # posting copy of executor storage; release via
+        # graph.release_components(result) after consuming the result.
+        w = (
+            td.join(dfreq, "__t")
+            .select(
+                id_col,
+                "__t",
+                (F.col("__tf") * F.log(F.col("__nd") / F.col("__df"))).alias(
+                    "__w"
+                ),
+            )
+            .withColumn("__norm", norm_w)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        .withColumn("__norm", norm_w)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if not prefix_filter:
-        a = w.select(
+        ms.hold(w)
+        if not prefix_filter:
+            a = w.select(
+                F.col(id_col).alias("id_a"), "__t",
+                F.col("__w").alias("__wa"), F.col("__norm").alias("__na"),
+            )
+            b = w.select(
+                F.col(id_col).alias("id_b"), "__t",
+                F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
+            )
+            result = (
+                a.join(b, "__t")
+                .filter(F.col("id_a") < F.col("id_b"))
+                .groupBy("id_a", "id_b")
+                .agg(
+                    F.round(
+                        F.sum(F.col("__wa") * F.col("__wb"))
+                        / (F.max("__na") * F.max("__nb")),
+                        6,
+                    ).alias("cosine")
+                )
+                .filter(F.col("cosine") >= threshold)
+            )
+            return ms.attach(result)
+
+        # Prefix-filtered form (AllPairs-style, the published sparse-join
+        # pruning): each doc partitions its terms into INDEX terms and a
+        # low-weight SUFFIX whose normalized norm² stays < threshold.  A
+        # qualifying pair must share at least one index term of one side:
+        # if every shared term sat in both suffixes, cos ≤ ‖suf_a‖·‖suf_b‖
+        # < √t·√t = t — so joining index postings against the full posting
+        # table (instead of full × full) is candidate-COMPLETE while
+        # skipping the shared-common-term fan-out the df cap alone leaves.
+        # Selection is per-doc greedy smallest-weight-first: ascending
+        # cumulative Σ(w/‖d‖)² stays suffix while < t; the window is per
+        # doc over its (banded) terms — bounded, never corpus-wide.
+        #
+        # MEASURED AND OFF BY DEFAULT at this operator's t=0.5 regime:
+        # result-identical to the band form (pytest pins it) but 3.3 s →
+        # 45 s at sf0.1 — with half the vector mass required in the index,
+        # candidates barely shrink while the exact verify pays a per-pair ×
+        # per-term re-join the direct term-join form never does.  The
+        # pruning's payoff regime is high thresholds (t ≥ ~0.9, suffixes
+        # hold ~81% of mass) over near-duplicate corpora; callers there
+        # pass prefix_filter=True.
+        nu2 = (F.col("__w") / F.col("__norm")) * (F.col("__w") / F.col("__norm"))
+        doc_w = Window.partitionBy(id_col).orderBy(
+            F.col("__w").asc(), F.col("__t").asc()
+        ).rowsBetween(Window.unboundedPreceding, 0)
+        flagged = w.withColumn("__cum", F.sum(nu2).over(doc_w))
+        idx = flagged.filter(F.col("__cum") >= F.lit(float(threshold)))
+        pa = idx.select(F.col(id_col).alias("id_a"), "__t")
+        pb = w.select(F.col(id_col).alias("id_b"), "__t")
+        cands = (
+            pa.join(pb, "__t")
+            .filter(F.col("id_a") != F.col("id_b"))
+            .select(
+                F.least("id_a", "id_b").alias("id_a"),
+                F.greatest("id_a", "id_b").alias("id_b"),
+            )
+            .distinct()
+        )
+        # candidate-confined exact verify: re-join both full vectors by id
+        # (the LSH-verify shape) — cost ∝ candidates × doc terms, with
+        # candidates already near the final pair count
+        va = w.select(
             F.col(id_col).alias("id_a"), "__t",
             F.col("__w").alias("__wa"), F.col("__norm").alias("__na"),
         )
-        b = w.select(
+        vb = w.select(
             F.col(id_col).alias("id_b"), "__t",
             F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
         )
         result = (
-            a.join(b, "__t")
-            .filter(F.col("id_a") < F.col("id_b"))
+            cands.join(va, "id_a")
+            .join(vb, ["id_b", "__t"])
             .groupBy("id_a", "id_b")
             .agg(
                 F.round(
@@ -920,72 +988,7 @@ def tfidf_doc_similarity(
             )
             .filter(F.col("cosine") >= threshold)
         )
-        result._persisted_intermediates = [w]
-        return result
-
-    # Prefix-filtered form (AllPairs-style, the published sparse-join
-    # pruning): each doc partitions its terms into INDEX terms and a
-    # low-weight SUFFIX whose normalized norm² stays < threshold.  A
-    # qualifying pair must share at least one index term of one side:
-    # if every shared term sat in both suffixes, cos ≤ ‖suf_a‖·‖suf_b‖
-    # < √t·√t = t — so joining index postings against the full posting
-    # table (instead of full × full) is candidate-COMPLETE while
-    # skipping the shared-common-term fan-out the df cap alone leaves.
-    # Selection is per-doc greedy smallest-weight-first: ascending
-    # cumulative Σ(w/‖d‖)² stays suffix while < t; the window is per
-    # doc over its (banded) terms — bounded, never corpus-wide.
-    #
-    # MEASURED AND OFF BY DEFAULT at this operator's t=0.5 regime:
-    # result-identical to the band form (pytest pins it) but 3.3 s →
-    # 45 s at sf0.1 — with half the vector mass required in the index,
-    # candidates barely shrink while the exact verify pays a per-pair ×
-    # per-term re-join the direct term-join form never does.  The
-    # pruning's payoff regime is high thresholds (t ≥ ~0.9, suffixes
-    # hold ~81% of mass) over near-duplicate corpora; callers there
-    # pass prefix_filter=True.
-    nu2 = (F.col("__w") / F.col("__norm")) * (F.col("__w") / F.col("__norm"))
-    doc_w = Window.partitionBy(id_col).orderBy(
-        F.col("__w").asc(), F.col("__t").asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    flagged = w.withColumn("__cum", F.sum(nu2).over(doc_w))
-    idx = flagged.filter(F.col("__cum") >= F.lit(float(threshold)))
-    pa = idx.select(F.col(id_col).alias("id_a"), "__t")
-    pb = w.select(F.col(id_col).alias("id_b"), "__t")
-    cands = (
-        pa.join(pb, "__t")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .distinct()
-    )
-    # candidate-confined exact verify: re-join both full vectors by id
-    # (the LSH-verify shape) — cost ∝ candidates × doc terms, with
-    # candidates already near the final pair count
-    va = w.select(
-        F.col(id_col).alias("id_a"), "__t",
-        F.col("__w").alias("__wa"), F.col("__norm").alias("__na"),
-    )
-    vb = w.select(
-        F.col(id_col).alias("id_b"), "__t",
-        F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
-    )
-    result = (
-        cands.join(va, "id_a")
-        .join(vb, ["id_b", "__t"])
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.round(
-                F.sum(F.col("__wa") * F.col("__wb"))
-                / (F.max("__na") * F.max("__nb")),
-                6,
-            ).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    result._persisted_intermediates = [w]
-    return result
+        return ms.attach(result)
 
 
 def token_entropy(
@@ -1049,51 +1052,50 @@ def source_kl_divergence(
     derived from it; everything after the collapse is vocabulary-sized.
     Returns (group_col, n_terms, kl_nats).
     """
-    # r13 optimization round: st is referenced THREE times (vocab,
-    # per-source totals, the grid join) — each reference re-ran the
-    # corpus tokenize+explode, the only corpus-grain work in the
-    # operator.  One eager checkpoint of the (source × vocab)-sized
-    # count table runs it once (guide §1.2); released via
-    # release_components on the result.
-    st = (
-        docs.select(
-            F.col(group_col).alias("grp"),
-            F.explode(word_tokens(text_col)).alias("__t"),
+    with materialize.scope() as ms:
+        # r13 optimization round: st is referenced THREE times (vocab,
+        # per-source totals, the grid join) — each reference re-ran the
+        # corpus tokenize+explode, the only corpus-grain work in the
+        # operator.  One eager checkpoint of the (source × vocab)-sized
+        # count table runs it once (guide §1.2); released via
+        # release_components on the result.
+        st = ms.checkpoint(
+            docs.select(
+                F.col(group_col).alias("grp"),
+                F.explode(word_tokens(text_col)).alias("__t"),
+            )
+            .groupBy("grp", "__t")
+            .agg(F.count(F.lit(1)).alias("__c"))
         )
-        .groupBy("grp", "__t")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
-    )
-    # dense (source x vocab) grid so absent terms get smoothed mass
-    vocab = st.groupBy("__t").agg(F.sum("__c").alias("__ct"))
-    vsize = vocab.agg(
-        F.count(F.lit(1)).alias("__v"), F.sum("__ct").alias("__nc")
-    )
-    groups = st.groupBy("grp").agg(F.sum("__c").alias("__ng"))
-    grid = (
-        groups.crossJoin(F.broadcast(vocab))
-        .join(st, ["grp", "__t"], "left")
-        .crossJoin(F.broadcast(vsize))
-        .select(
-            "grp",
-            "__ng",
-            "__v",
-            F.coalesce(F.col("__c"), F.lit(0)).alias("__c"),
-            "__ct",
-            "__nc",
+        # dense (source x vocab) grid so absent terms get smoothed mass
+        vocab = st.groupBy("__t").agg(F.sum("__c").alias("__ct"))
+        vsize = vocab.agg(
+            F.count(F.lit(1)).alias("__v"), F.sum("__ct").alias("__nc")
         )
-    )
-    p = (F.col("__c") + alpha) / (F.col("__ng") + F.lit(alpha) * F.col("__v"))
-    q = (F.col("__ct") + alpha) / (F.col("__nc") + F.lit(alpha) * F.col("__v"))
-    result = (
-        grid.groupBy(F.col("grp").alias(group_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.round(F.sum(p * F.log(p / q)), 6).alias("kl_nats"),
+        groups = st.groupBy("grp").agg(F.sum("__c").alias("__ng"))
+        grid = (
+            groups.crossJoin(F.broadcast(vocab))
+            .join(st, ["grp", "__t"], "left")
+            .crossJoin(F.broadcast(vsize))
+            .select(
+                "grp",
+                "__ng",
+                "__v",
+                F.coalesce(F.col("__c"), F.lit(0)).alias("__c"),
+                "__ct",
+                "__nc",
+            )
         )
-    )
-    result._extra_ckpts = [st]
-    return result
+        p = (F.col("__c") + alpha) / (F.col("__ng") + F.lit(alpha) * F.col("__v"))
+        q = (F.col("__ct") + alpha) / (F.col("__nc") + F.lit(alpha) * F.col("__v"))
+        result = (
+            grid.groupBy(F.col("grp").alias(group_col))
+            .agg(
+                F.count(F.lit(1)).alias("n_terms"),
+                F.round(F.sum(p * F.log(p / q)), 6).alias("kl_nats"),
+            )
+        )
+        return ms.attach(result)
 
 
 def pmi_collocations(
@@ -1124,45 +1126,43 @@ def pmi_collocations(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    # r13 optimization round: the bigram counts, unigram counts and
-    # bigram total each re-tokenized the corpus (three regex-split
-    # passes over the text); one eager checkpoint of the token arrays
-    # feeds all three (guide §1.2).  Released via release_components
-    # on the result.
-    base = docs.select(word_tokens(text_col).alias("__toks")).localCheckpoint(
-        eager=True
-    )
-    bg = (
-        base.select(F.explode(pairs).alias("__p"))
-        .select(F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("pair_count"))
-        .filter(F.col("pair_count") >= min_count)
-    )
-    uni = (
-        base.select(F.explode("__toks").alias("__t"))
-        .groupBy("__t")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    tot_b = base.select(
-        F.greatest(F.size("__toks") - 1, F.lit(0)).alias("__nb")
-    ).agg(F.sum("__nb").alias("__tb"))
-    tot_u = uni.agg(F.sum("__c").alias("__tu"))
-    u1 = uni.select(F.col("__t").alias("w1"), F.col("__c").alias("__c1"))
-    u2 = uni.select(F.col("__t").alias("w2"), F.col("__c").alias("__c2"))
-    pmi = F.log(
-        (F.col("pair_count") / F.col("__tb"))
-        / ((F.col("__c1") / F.col("__tu")) * (F.col("__c2") / F.col("__tu")))
-    )
-    result = (
-        bg.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(tot_b))
-        .crossJoin(F.broadcast(tot_u))
-        .select("w1", "w2", "pair_count", F.round(pmi, 6).alias("pmi"))
-    )
-    result._extra_ckpts = [base]
-    return result
+    with materialize.scope() as ms:
+        # r13 optimization round: the bigram counts, unigram counts and
+        # bigram total each re-tokenized the corpus (three regex-split
+        # passes over the text); one eager checkpoint of the token arrays
+        # feeds all three (guide §1.2).  Released via release_components
+        # on the result.
+        base = ms.checkpoint(docs.select(word_tokens(text_col).alias("__toks")))
+        bg = (
+            base.select(F.explode(pairs).alias("__p"))
+            .select(F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
+            .groupBy("w1", "w2")
+            .agg(F.count(F.lit(1)).alias("pair_count"))
+            .filter(F.col("pair_count") >= min_count)
+        )
+        uni = (
+            base.select(F.explode("__toks").alias("__t"))
+            .groupBy("__t")
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
+        tot_b = base.select(
+            F.greatest(F.size("__toks") - 1, F.lit(0)).alias("__nb")
+        ).agg(F.sum("__nb").alias("__tb"))
+        tot_u = uni.agg(F.sum("__c").alias("__tu"))
+        u1 = uni.select(F.col("__t").alias("w1"), F.col("__c").alias("__c1"))
+        u2 = uni.select(F.col("__t").alias("w2"), F.col("__c").alias("__c2"))
+        pmi = F.log(
+            (F.col("pair_count") / F.col("__tb"))
+            / ((F.col("__c1") / F.col("__tu")) * (F.col("__c2") / F.col("__tu")))
+        )
+        result = (
+            bg.join(F.broadcast(u1), "w1")
+            .join(F.broadcast(u2), "w2")
+            .crossJoin(F.broadcast(tot_b))
+            .crossJoin(F.broadcast(tot_u))
+            .select("w1", "w2", "pair_count", F.round(pmi, 6).alias("pmi"))
+        )
+        return ms.attach(result)
 
 
 def score_linear_model(
@@ -1366,33 +1366,31 @@ def unigram_sampling_table(
         "__w", F.round(F.pow(F.col("tf").cast("double"), power), round_to)
     )
     order = [F.col("tf").desc(), F.col("word").asc()]
-    run = global_cumsum(
-        weighted, order, {"__w": "__cum"}, partitions=partitions
-    )
-    total = weighted.agg(F.sum("__w").alias("__total"))
-    out = run.crossJoin(F.broadcast(total)).select(
-        "word",
-        "tf",
-        F.round(
-            F.when(F.col("__total") > 0, F.col("__w") / F.col("__total")),
-            round_to,
-        ).alias("prob"),
-        F.round(
-            F.when(
-                F.col("__total") > 0,
-                (F.col("__cum") - F.col("__w")) / F.col("__total"),
-            ),
-            round_to,
-        ).alias("cum_lo"),
-        F.round(
-            F.when(F.col("__total") > 0, F.col("__cum") / F.col("__total")),
-            round_to,
-        ).alias("cum_hi"),
-    )
-    out._persisted_intermediates = getattr(
-        run, "_persisted_intermediates", []
-    )
-    return out
+    with materialize.scope() as ms:
+        run = ms.hold(
+            global_cumsum(weighted, order, {"__w": "__cum"}, partitions=partitions)
+        )
+        total = weighted.agg(F.sum("__w").alias("__total"))
+        out = run.crossJoin(F.broadcast(total)).select(
+            "word",
+            "tf",
+            F.round(
+                F.when(F.col("__total") > 0, F.col("__w") / F.col("__total")),
+                round_to,
+            ).alias("prob"),
+            F.round(
+                F.when(
+                    F.col("__total") > 0,
+                    (F.col("__cum") - F.col("__w")) / F.col("__total"),
+                ),
+                round_to,
+            ).alias("cum_lo"),
+            F.round(
+                F.when(F.col("__total") > 0, F.col("__cum") / F.col("__total")),
+                round_to,
+            ).alias("cum_hi"),
+        )
+        return ms.attach(out)
 
 
 def readability_score(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
+
 
 def top1_per_group(
     df: DataFrame, partition_cols: list[str], order_col: str, latest: bool = True
@@ -159,51 +161,50 @@ def global_cumsum(
     shuffle files, never re-sampling boundaries.  MEMORY_AND_DISK with
     LRU eviction bounds the cost.  Spark's cache manager holds the
     relation until explicit unpersist or session end — NOT JVM GC —
-    so the handle is attached to the result as
-    ``_persisted_intermediates`` (the repo convention): callers that
-    run many cumsums in one session should
-    ``graph.release_components(out)`` after consuming each result.
+    so the result carries the handle: callers that run many cumsums
+    in one session should ``release_components(out)`` after consuming
+    each result.
     """
-    srcs = list(values)
-    part = df.repartitionByRange(partitions, *order)
-    staged = part.withColumn("__pid", F.spark_partition_id()).persist()
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = staged.select(
-        "*",
-        *[
-            F.sum(F.col(s)).over(w_local).alias(f"__loc_{s}")
-            for s in srcs
-        ],
-    )
-    totals = staged.groupBy("__pid").agg(
-        *[F.sum(F.col(s)).alias(f"__tot_{s}") for s in srcs]
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__pid",
-        *[
-            F.coalesce(F.sum(f"__tot_{s}").over(w_off), F.lit(0)).alias(
-                f"__off_{s}"
-            )
-            for s in srcs
-        ],
-    )
-    out = ranked.join(F.broadcast(offsets), "__pid")
-    for s in srcs:
-        out = out.withColumn(
-            values[s], F.col(f"__off_{s}") + F.col(f"__loc_{s}")
+    with materialize.scope() as ms:
+        srcs = list(values)
+        part = df.repartitionByRange(partitions, *order)
+        staged = ms.hold(part.withColumn("__pid", F.spark_partition_id()).persist())
+        w_local = (
+            Window.partitionBy("__pid")
+            .orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-    out = out.drop(
-        "__pid", *[f"__loc_{s}" for s in srcs], *[f"__off_{s}" for s in srcs]
-    )
-    out._persisted_intermediates = [staged]
-    return out
+        ranked = staged.select(
+            "*",
+            *[
+                F.sum(F.col(s)).over(w_local).alias(f"__loc_{s}")
+                for s in srcs
+            ],
+        )
+        totals = staged.groupBy("__pid").agg(
+            *[F.sum(F.col(s)).alias(f"__tot_{s}") for s in srcs]
+        )
+        w_off = Window.orderBy("__pid").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        offsets = totals.select(
+            "__pid",
+            *[
+                F.coalesce(F.sum(f"__tot_{s}").over(w_off), F.lit(0)).alias(
+                    f"__off_{s}"
+                )
+                for s in srcs
+            ],
+        )
+        out = ranked.join(F.broadcast(offsets), "__pid")
+        for s in srcs:
+            out = out.withColumn(
+                values[s], F.col(f"__off_{s}") + F.col(f"__loc_{s}")
+            )
+        out = out.drop(
+            "__pid", *[f"__loc_{s}" for s in srcs], *[f"__off_{s}" for s in srcs]
+        )
+        return ms.attach(out)
 
 
 def global_rank(
@@ -217,15 +218,12 @@ def global_rank(
     window — :func:`global_cumsum` of a literal 1.  ``order`` must be
     a total order (include a tiebreaker) for deterministic ranks.
     """
-    staged = df.withColumn("__one", F.lit(1).cast("long"))
-    summed = global_cumsum(
-        staged, order, {"__one": rank_col}, partitions=partitions
-    )
-    out = summed.drop("__one")
-    # .drop() builds a fresh DataFrame — re-attach the cache handle so
-    # release_components(out) still reaches the staged frame
-    out._persisted_intermediates = summed._persisted_intermediates
-    return out
+    with materialize.scope() as ms:
+        staged = df.withColumn("__one", F.lit(1).cast("long"))
+        summed = ms.hold(
+            global_cumsum(staged, order, {"__one": rank_col}, partitions=partitions)
+        )
+        return ms.attach(summed.drop("__one"))
 
 
 def global_ntile_pct(
@@ -242,26 +240,28 @@ def global_ntile_pct(
     built from :func:`global_rank` plus one broadcast scalar, so no
     stage ever runs single-task.  ``order`` must be a total order.
     """
-    ranked = global_rank(df, order, rank_col="__r", partitions=partitions)
-    n_tbl = ranked.agg(F.count(F.lit(1)).alias("__n"))
-    q = F.floor(F.col("__n") / k)
-    r = F.col("__n") % k
-    big = q + 1  # first r tiles have q+1 rows
-    in_big = F.col("__r") <= r * big
-    tile = F.when(
-        in_big, F.floor((F.col("__r") - 1) / big) + 1
-    ).otherwise(r + F.floor((F.col("__r") - r * big - 1) / q) + 1)
-    pct = F.when(F.col("__n") > 1, (F.col("__r") - 1) / (F.col("__n") - 1)).otherwise(
-        F.lit(0.0)
-    )
-    out = (
-        ranked.join(F.broadcast(n_tbl), how="cross")
-        .withColumn(tile_col, tile.cast("int"))
-        .withColumn(pct_col, pct)
-        .drop("__r", "__n")
-    )
-    out._persisted_intermediates = ranked._persisted_intermediates
-    return out
+    with materialize.scope() as ms:
+        ranked = ms.hold(
+            global_rank(df, order, rank_col="__r", partitions=partitions)
+        )
+        n_tbl = ranked.agg(F.count(F.lit(1)).alias("__n"))
+        q = F.floor(F.col("__n") / k)
+        r = F.col("__n") % k
+        big = q + 1  # first r tiles have q+1 rows
+        in_big = F.col("__r") <= r * big
+        tile = F.when(
+            in_big, F.floor((F.col("__r") - 1) / big) + 1
+        ).otherwise(r + F.floor((F.col("__r") - r * big - 1) / q) + 1)
+        pct = F.when(F.col("__n") > 1, (F.col("__r") - 1) / (F.col("__n") - 1)).otherwise(
+            F.lit(0.0)
+        )
+        out = (
+            ranked.join(F.broadcast(n_tbl), how="cross")
+            .withColumn(tile_col, tile.cast("int"))
+            .withColumn(pct_col, pct)
+            .drop("__r", "__n")
+        )
+        return ms.attach(out)
 
 
 def asof_join(
@@ -536,38 +536,39 @@ def skyline_2d(
     min broadcasts back as each slice's offset.  No single-task
     window, no quadratic dominance join; the staged frame is persisted
     so both branches share one range shuffle (see global_cumsum's
-    determinism note) and the handle rides ``result.
-    _persisted_intermediates`` for ``graph.release_components``.
+    determinism note) and the result carries the handle for
+    ``release_components``.
     """
-    pts = (
-        df.select(F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
-        .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-        .distinct()
-    )
-    staged = (
-        pts.repartitionByRange(partitions, F.col("__x").asc(), F.col("__y").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(F.col("__x").asc(), F.col("__y").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = staged.withColumn("__locmin", F.min("__y").over(w_local))
-    pmins = staged.groupBy("__pid").agg(F.min("__y").alias("__pmin"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = pmins.select(
-        "__pid", F.min("__pmin").over(w_off).alias("__premin")
-    )
-    prev_min = F.least(F.col("__locmin"), F.col("__premin"))
-    out = (
-        local.join(F.broadcast(offs), "__pid")
-        .filter(prev_min.isNull() | (F.col("__y") < prev_min))
-        .select(F.col("__x").alias(x_col), F.col("__y").alias(y_col))
-    )
-    out._persisted_intermediates = [staged]
-    return out
+    with materialize.scope() as ms:
+        pts = (
+            df.select(F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
+            .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
+            .distinct()
+        )
+        staged = (
+            pts.repartitionByRange(partitions, F.col("__x").asc(), F.col("__y").asc())
+            .withColumn("__pid", F.spark_partition_id())
+            .persist()
+        )
+        ms.hold(staged)
+        w_local = (
+            Window.partitionBy("__pid")
+            .orderBy(F.col("__x").asc(), F.col("__y").asc())
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        local = staged.withColumn("__locmin", F.min("__y").over(w_local))
+        pmins = staged.groupBy("__pid").agg(F.min("__y").alias("__pmin"))
+        w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+        offs = pmins.select(
+            "__pid", F.min("__pmin").over(w_off).alias("__premin")
+        )
+        prev_min = F.least(F.col("__locmin"), F.col("__premin"))
+        out = (
+            local.join(F.broadcast(offs), "__pid")
+            .filter(prev_min.isNull() | (F.col("__y") < prev_min))
+            .select(F.col("__x").alias(x_col), F.col("__y").alias(y_col))
+        )
+        return ms.attach(out)
 
 
 def seasonal_naive_backtest(

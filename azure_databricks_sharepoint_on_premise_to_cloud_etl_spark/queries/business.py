@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -756,64 +757,61 @@ def q_rfm_segments_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("recency_days", F.datediff("__mx", "__last"))
         .drop("__mx", "__last")
     )
-    # Three INDEPENDENT narrow ntiles off one materialized base,
-    # joined back on the key — chaining the three global_ntile_pct
-    # layers instead compounds each layer's staged/totals/offsets
-    # references into a 130-scan analyzed plan (plan_audit caught it)
-    # and range-shuffles the full wide row three times; here each
-    # range shuffle moves only (key, metric).  The base aggregate is
-    # referenced ~7× (each machine's staged + count paths + the final
-    # join), so it is eagerly localCheckpoint-ed — the
-    # triangle_counts precedent: lineage-cut guarantees ONE orders
-    # scan regardless of cache eviction, released via _extra_ckpts.
-    base = base.localCheckpoint()
-    scores = []
-    for metric, order, col_name in (
-        ("recency_days", F.col("recency_days").desc(), "r_score"),
-        ("frequency", F.col("frequency").asc(), "f_score"),
-        ("monetary", F.col("monetary").asc(), "m_score"),
-    ):
-        t = global_ntile_pct(
-            base.select("o_custkey", metric),
-            [order, F.col("o_custkey").asc()],
-            5,
-            tile_col=col_name,
-            pct_col="__p",
-        ).select("o_custkey", col_name)
-        scores.append(t)
-    t3 = base
-    for t in scores:
-        t3 = t3.join(t, "o_custkey")
-    seg = (
-        F.when(
-            (F.col("r_score") >= 4) & (F.col("f_score") >= 4),
-            F.lit("champion"),
+    with materialize.scope() as ms:
+        # Three INDEPENDENT narrow ntiles off one materialized base,
+        # joined back on the key — chaining the three global_ntile_pct
+        # layers instead compounds each layer's staged/totals/offsets
+        # references into a 130-scan analyzed plan (plan_audit caught it)
+        # and range-shuffles the full wide row three times; here each
+        # range shuffle moves only (key, metric).  The base aggregate is
+        # referenced ~7× (each machine's staged + count paths + the final
+        # join), so it is eagerly localCheckpoint-ed — the
+        # triangle_counts precedent: lineage-cut guarantees ONE orders
+        # scan regardless of cache eviction, released with the result.
+        base = ms.checkpoint(base)
+        scores = []
+        for metric, order, col_name in (
+            ("recency_days", F.col("recency_days").desc(), "r_score"),
+            ("frequency", F.col("frequency").asc(), "f_score"),
+            ("monetary", F.col("monetary").asc(), "m_score"),
+        ):
+            t = ms.hold(
+                global_ntile_pct(
+                    base.select("o_custkey", metric),
+                    [order, F.col("o_custkey").asc()],
+                    5,
+                    tile_col=col_name,
+                    pct_col="__p",
+                )
+            ).select("o_custkey", col_name)
+            scores.append(t)
+        t3 = base
+        for t in scores:
+            t3 = t3.join(t, "o_custkey")
+        seg = (
+            F.when(
+                (F.col("r_score") >= 4) & (F.col("f_score") >= 4),
+                F.lit("champion"),
+            )
+            .when(F.col("r_score") >= 4, F.lit("recent"))
+            .when(F.col("f_score") >= 4, F.lit("at_risk"))
+            .when(
+                (F.col("r_score") <= 2) & (F.col("f_score") <= 2),
+                F.lit("hibernating"),
+            )
+            .otherwise(F.lit("regular"))
         )
-        .when(F.col("r_score") >= 4, F.lit("recent"))
-        .when(F.col("f_score") >= 4, F.lit("at_risk"))
-        .when(
-            (F.col("r_score") <= 2) & (F.col("f_score") <= 2),
-            F.lit("hibernating"),
+        out = t3.select(
+            "o_custkey",
+            "recency_days",
+            "frequency",
+            "monetary",
+            "r_score",
+            "f_score",
+            "m_score",
+            seg.alias("segment"),
         )
-        .otherwise(F.lit("regular"))
-    )
-    out = t3.select(
-        "o_custkey",
-        "recency_days",
-        "frequency",
-        "monetary",
-        "r_score",
-        "f_score",
-        "m_score",
-        seg.alias("segment"),
-    )
-    out._persisted_intermediates = [
-        p
-        for t in scores
-        for p in getattr(t, "_persisted_intermediates", [])
-    ]
-    out._extra_ckpts = [base]
-    return out
+        return ms.attach(out)
 
 
 ORACLE_RFM_DISTRIBUTED = """
@@ -855,22 +853,20 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = rebalance(load_table(spark, sf_dir, "lineitem"))
     keys = li.select(F.col("l_orderkey").alias("k")).distinct()
-    ranked = global_rank(keys, [F.col("k").asc()], rank_col="__r")
-    out = (
-        ranked.withColumn("__grp", F.col("k") - F.col("__r"))
-        .groupBy("__grp")
-        .agg(
-            F.min("k").alias("island_start"),
-            F.max("k").alias("island_end"),
-            F.count(F.lit(1)).alias("n_keys"),
+    with materialize.scope() as ms:
+        ranked = ms.hold(global_rank(keys, [F.col("k").asc()], rank_col="__r"))
+        out = (
+            ranked.withColumn("__grp", F.col("k") - F.col("__r"))
+            .groupBy("__grp")
+            .agg(
+                F.min("k").alias("island_start"),
+                F.max("k").alias("island_end"),
+                F.count(F.lit(1)).alias("n_keys"),
+            )
+            .drop("__grp")
+            .select("island_start", "island_end", "n_keys")
         )
-        .drop("__grp")
-        .select("island_start", "island_end", "n_keys")
-    )
-    out._persisted_intermediates = getattr(
-        ranked, "_persisted_intermediates", []
-    )
-    return out
+        return ms.attach(out)
 
 
 ORACLE_SEQUENCE_GAPS = """

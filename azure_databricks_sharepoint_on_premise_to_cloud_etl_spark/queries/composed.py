@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import materialize
 from .core import _stream_events
 from .curation import AUX_ORACLES, AUX_QUERIES
 from .retrieval import STREAMING_PLAN_BUILDERS
@@ -318,83 +319,53 @@ def q_source_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(word_tokens("text"))).cast("long").alias("n_tokens"),
     )
-    kl_raw = text.source_kl_divergence(d, alpha=_KL_ALPHA)
-    kl = kl_raw.select("source", "kl_nats")
-    ks = stats.per_group_ks(d, "source", "n_chars").select(
-        F.col("source"), F.col("ks_stat")
-    )
-    nov = (
-        text.novelty_score(d, n=_NOVELTY_N)
-        .join(d.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(F.round(F.avg("novelty"), 6).alias("mean_novelty"))
-    )
-    keepers = dedup.exact_dedup_groups(d).select(
-        F.col("canonical_id").alias("doc_id"), F.lit(1).alias("__canon")
-    )
-    dup = (
-        d.select("doc_id", "source")
-        .join(keepers, "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.round(
-                F.avg(F.when(F.col("__canon").isNull(), 1.0).otherwise(0.0)),
-                6,
-            ).alias("dup_rate")
+    with materialize.scope() as ms:
+        kl_raw = ms.hold(text.source_kl_divergence(d, alpha=_KL_ALPHA))
+        kl = kl_raw.select("source", "kl_nats")
+        ks = stats.per_group_ks(d, "source", "n_chars").select(
+            F.col("source"), F.col("ks_stat")
         )
-    )
-    # each panel is a source-cardinality table (tens of rows); eager
-    # localCheckpoints materialize every panel exactly once — without
-    # them the five-way join re-derives the corpus per reference and
-    # the plan audit reads 26 parquet-scan references (the
-    # training_shard_pipeline stage-boundary discipline).
-    # r13 optimization round: the five corpus-collapsing panels are
-    # INDEPENDENT, so they materialize from a small thread pool
-    # instead of serially — Spark happily runs concurrent jobs inside
-    # one application, and each panel's tail stragglers back-fill the
-    # idle cores the next panel's scan wants (guide §2.6 "overlap
-    # independent jobs"); results are unchanged, only the job overlap
-    # is new.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    # r13 advice: if one panel's checkpoint job fails, release every
-    # sibling checkpoint that DID materialize (and the KL operator's
-    # internal corpus-grain checkpoint) before re-raising — otherwise
-    # the executor storage leaks for the session.  Explicit futures,
-    # not pool.map: map's iterator drops completed results once any
-    # task raises, making them unreleasable.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(lambda f=f: f.localCheckpoint(eager=True))
-            for f in (vol, kl, ks, nov, dup)
-        ]
-        panels = []
-        first_err = None
-        for fu in futs:
-            try:
-                panels.append(fu.result())
-            except BaseException as e:  # noqa: BLE001 — release-then-reraise
-                first_err = first_err or e
-        if first_err is not None:
-            for p in panels:
-                _release_local_checkpoint(p)
-            for _h in getattr(kl_raw, "_extra_ckpts", None) or []:
-                _release_local_checkpoint(_h)
-            raise first_err
-    # the KL operator checkpoints its internal (source × vocab) count
-    # table; the kl panel has fully consumed it — free it now
-    for _h in getattr(kl_raw, "_extra_ckpts", None) or []:
-        _release_local_checkpoint(_h)
-    out = panels[0]
-    for f in panels[1:]:
-        out = out.join(f, "source")
-    # localCheckpoint blocks are freed via _release_local_checkpoint,
-    # not DataFrame.unpersist — hence _extra_ckpts, not
-    # _persisted_intermediates
-    out._extra_ckpts = panels
-    return out
+        nov = (
+            text.novelty_score(d, n=_NOVELTY_N)
+            .join(d.select("doc_id", "source"), "doc_id")
+            .groupBy("source")
+            .agg(F.round(F.avg("novelty"), 6).alias("mean_novelty"))
+        )
+        keepers = dedup.exact_dedup_groups(d).select(
+            F.col("canonical_id").alias("doc_id"), F.lit(1).alias("__canon")
+        )
+        dup = (
+            d.select("doc_id", "source")
+            .join(keepers, "doc_id", "left")
+            .groupBy("source")
+            .agg(
+                F.round(
+                    F.avg(F.when(F.col("__canon").isNull(), 1.0).otherwise(0.0)),
+                    6,
+                ).alias("dup_rate")
+            )
+        )
+        # each panel is a source-cardinality table (tens of rows); eager
+        # localCheckpoints materialize every panel exactly once — without
+        # them the five-way join re-derives the corpus per reference and
+        # the plan audit reads 26 parquet-scan references (the
+        # training_shard_pipeline stage-boundary discipline).
+        # r13 optimization round: the five corpus-collapsing panels are
+        # INDEPENDENT, so they materialize from a small thread pool
+        # instead of serially — Spark happily runs concurrent jobs inside
+        # one application, and each panel's tail stragglers back-fill the
+        # idle cores the next panel's scan wants (guide §2.6 "overlap
+        # independent jobs"); results are unchanged, only the job overlap
+        # is new.
+        futs = [ms.background(f) for f in (vol, kl, ks, nov, dup)]
+        panels = [fu.result() for fu in futs]
+        # the KL operator checkpoints its internal (source × vocab) count
+        # table; the kl panel has fully consumed it — free it now
+        ms.release(kl_raw)
+        out = panels[0]
+        for f in panels[1:]:
+            out = out.join(f, "source")
+        return ms.attach(out)
 
 
 def _source_health_oracle() -> str:
@@ -648,67 +619,42 @@ def q_diverse_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrently from a 2-thread pool (guide §2.6) so the BM25 scan
     # and the brute-force cosine scan overlap instead of running
     # serially; the fusion then joins two checkpointed 25-row tables.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    # explicit futures + release-on-failure (r13 advice): a failed leg
-    # must not leak its sibling's materialized checkpoint
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(lambda f=f: f.localCheckpoint(eager=True))
-            for f in (lex, sem)
-        ]
-        done = []
-        first_err = None
-        for fu in futs:
-            try:
-                done.append(fu.result())
-            except BaseException as e:  # noqa: BLE001 — release-then-reraise
-                first_err = first_err or e
-        if first_err is not None:
-            for p in done:
-                _release_local_checkpoint(p)
-            raise first_err
-        lex, sem = done
-    fused = lex.join(sem, "doc_id", "full_outer").select(
-        "doc_id",
-        F.round(
-            F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (_RRF_K + F.col("sem_rank")), F.lit(0.0)),
-            6,
-        ).alias("rrf"),
-    )
-    cands = (
-        fused.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.orderBy(F.col("rrf").desc(), F.col("doc_id"))
-            ),
-        )
-        .filter(F.col("__rn") <= _DIV_TOPN)
-        .drop("__rn")
-        .join(
-            e.select(F.col("vec_id").alias("doc_id"), "embedding"),
+    with materialize.scope() as ms:
+        lex, sem = [fu.result() for fu in [ms.background(f) for f in (lex, sem)]]
+        fused = lex.join(sem, "doc_id", "full_outer").select(
             "doc_id",
+            F.round(
+                F.coalesce(1.0 / (_RRF_K + F.col("lex_rank")), F.lit(0.0))
+                + F.coalesce(1.0 / (_RRF_K + F.col("sem_rank")), F.lit(0.0)),
+                6,
+            ).alias("rrf"),
         )
-        .select(
-            F.lit(0).alias("query_id"),
-            F.col("doc_id").alias("cand_id"),
-            "embedding",
-            F.col("rrf").alias("rel"),
+        cands = (
+            fused.withColumn(
+                "__rn",
+                F.row_number().over(
+                    Window.orderBy(F.col("rrf").desc(), F.col("doc_id"))
+                ),
+            )
+            .filter(F.col("__rn") <= _DIV_TOPN)
+            .drop("__rn")
+            .join(
+                e.select(F.col("vec_id").alias("doc_id"), "embedding"),
+                "doc_id",
+            )
+            .select(
+                F.lit(0).alias("query_id"),
+                F.col("doc_id").alias("cand_id"),
+                "embedding",
+                F.col("rrf").alias("rel"),
+            )
         )
-    )
-    result = mmr_rerank(
-        cands, "query_id", "cand_id", "embedding", "rel",
-        k=_DIV_K, lam=_MMR_LAM,
-    )
-    # chain the leg checkpoints onto the MMR result's release hook so
-    # release_components frees them with the operator's own blocks
-    result._extra_ckpts = (
-        getattr(result, "_extra_ckpts", None) or []
-    ) + [lex, sem]
-    return result
+        return ms.attach(
+            mmr_rerank(
+                cands, "query_id", "cand_id", "embedding", "rel",
+                k=_DIV_K, lam=_MMR_LAM,
+            )
+        )
 
 
 def _diverse_retrieval_oracle() -> str:
@@ -1196,126 +1142,123 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .curation import _INC_THRESHOLD, _TSP_BUDGET, _TSP_TEMP
 
     old, new = _crawl_refresh_frames(spark, sf_dir)
-    # 1. CDC: ONE full-outer key join; the feed is delta-sized and is
-    # consumed by three branches (op mix, churn, increment) — eager
-    # localCheckpoint materializes the join exactly once
-    feed = scd.snapshot_diff(
-        old, new, "doc_id", ["source", "text"]
-    ).localCheckpoint(eager=True)
-    ops = feed.agg(
-        F.sum((F.col("change_type") == "insert").cast("long")).alias(
-            "n_inserts"
-        ),
-        F.sum((F.col("change_type") == "update").cast("long")).alias(
-            "n_updates"
-        ),
-        F.sum((F.col("change_type") == "delete").cast("long")).alias(
-            "n_deletes"
-        ),
-    )
-    # 2. health delta gate: churn per source from the feed vs old
-    # volumes (both source-cardinality tables)
-    vol = old.groupBy("source").agg(F.count(F.lit(1)).alias("__n_old"))
-    churn = (
-        feed.filter(F.col("change_type").isin("update", "delete"))
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("__n_churn"))
-    )
-    health = vol.join(churn, "source", "left").select(
-        "source",
-        (
-            F.coalesce(F.col("__n_churn"), F.lit(0)) / F.col("__n_old")
-        ).alias("churn_rate"),
-    )
-    healthy = health.filter(F.col("churn_rate") <= _CRL_CHURN_MAX).select(
-        "source"
-    )
-    n_healthy = health.agg(
-        F.sum((F.col("churn_rate") <= _CRL_CHURN_MAX).cast("long")).alias(
-            "n_src_healthy"
+    with materialize.scope() as ms:
+        # 1. CDC: ONE full-outer key join; the feed is delta-sized and is
+        # consumed by three branches (op mix, churn, increment) — eager
+        # localCheckpoint materializes the join exactly once
+        feed = ms.checkpoint(
+            scd.snapshot_diff(old, new, "doc_id", ["source", "text"])
         )
-    )
-    # 3. the gated increment (NEW text), judged against the standing
-    # corpus; increment is re-read by the novel-survivor join below,
-    # so checkpoint the (delta-sized) frame once
-    increment = (
-        feed.filter(F.col("change_type").isin("insert", "update"))
-        .join(F.broadcast(healthy), "source", "left_semi")
-        .select("doc_id", "source", "text")
-        .localCheckpoint(eager=True)
-    )
-    # statuses is increment-sized and feeds TWO branches (the status
-    # mix and the novel-survivor semi-join); eager localCheckpoint
-    # materializes the whole sig/band/verify pipeline ONCE — without
-    # it both branches re-derive the corpus-side artifacts (the plan
-    # audit reads the dedup's 12 scan references twice)
-    raw_statuses = dedup.incremental_dedup(
-        increment,
-        old,
-        k=_MINHASH_K,
-        num_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_INC_THRESHOLD,
-    )
-    statuses = raw_statuses.localCheckpoint(eager=True)
-    # the eager checkpoint has fully consumed the dedup result, so the
-    # operator's internal state — the persisted increment artifact
-    # frame AND (r14) the reference-artifact + candidate checkpoints —
-    # can be freed NOW: localCheckpoint returns a new DataFrame
-    # without the release hooks, so without this they would leak per
-    # call (r13 review)
-    from ..operators.graph import release_components as _release_comps
-
-    _release_comps(raw_statuses)
-    dd = statuses.agg(
-        F.sum((F.col("status") == "exact_dup").cast("long")).alias(
-            "n_exact_dup"
-        ),
-        F.sum((F.col("status") == "near_dup").cast("long")).alias(
-            "n_near_dup"
-        ),
-        F.sum((F.col("status") == "novel").cast("long")).alias("n_novel"),
-    )
-    novel_ids = statuses.filter(F.col("status") == "novel").select("doc_id")
-    surv = increment.join(novel_ids, "doc_id", "left_semi").select(
-        "doc_id",
-        "source",
-        F.pmod(F.col("doc_id"), F.lit(_PACK_SHARDS)).cast("int").alias(
-            "shard"
-        ),
-        F.size(word_tokens("text")).alias("tokens"),
-    )
-    # 4. mix toward the budget, then pack per shard
-    mixed = sampling.temperature_mix(
-        surv,
-        "source",
-        temperature=_TSP_TEMP,
-        budget_fraction=_TSP_BUDGET,
-        key_col="doc_id",
-        salt=_SAMPLE_SALT,
-    )
-    packed = sampling.pack_sequences(
-        mixed.select("doc_id", "source", "shard", "tokens"),
-        token_col="tokens",
-        budget=_PACK_BUDGET,
-        shard_col="shard",
-    )
-    summary = (
-        ops.crossJoin(n_healthy).crossJoin(dd)
-    )
-    out = (
-        packed.groupBy("shard", "pack_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("tokens").cast("long").alias("pack_tokens"),
-            F.countDistinct("source").cast("long").alias("n_sources"),
-            F.min("doc_id").cast("long").alias("first_doc"),
-            F.max("doc_id").cast("long").alias("last_doc"),
+        ops = feed.agg(
+            F.sum((F.col("change_type") == "insert").cast("long")).alias(
+                "n_inserts"
+            ),
+            F.sum((F.col("change_type") == "update").cast("long")).alias(
+                "n_updates"
+            ),
+            F.sum((F.col("change_type") == "delete").cast("long")).alias(
+                "n_deletes"
+            ),
         )
-        .crossJoin(F.broadcast(summary))
-    )
-    out._extra_ckpts = [feed, increment, statuses]
-    return out
+        # 2. health delta gate: churn per source from the feed vs old
+        # volumes (both source-cardinality tables)
+        vol = old.groupBy("source").agg(F.count(F.lit(1)).alias("__n_old"))
+        churn = (
+            feed.filter(F.col("change_type").isin("update", "delete"))
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("__n_churn"))
+        )
+        health = vol.join(churn, "source", "left").select(
+            "source",
+            (
+                F.coalesce(F.col("__n_churn"), F.lit(0)) / F.col("__n_old")
+            ).alias("churn_rate"),
+        )
+        healthy = health.filter(F.col("churn_rate") <= _CRL_CHURN_MAX).select(
+            "source"
+        )
+        n_healthy = health.agg(
+            F.sum((F.col("churn_rate") <= _CRL_CHURN_MAX).cast("long")).alias(
+                "n_src_healthy"
+            )
+        )
+        # 3. the gated increment (NEW text), judged against the standing
+        # corpus; increment is re-read by the novel-survivor join below,
+        # so checkpoint the (delta-sized) frame once
+        increment = ms.checkpoint(
+            feed.filter(F.col("change_type").isin("insert", "update"))
+            .join(F.broadcast(healthy), "source", "left_semi")
+            .select("doc_id", "source", "text")
+        )
+        # statuses is increment-sized and feeds TWO branches (the status
+        # mix and the novel-survivor semi-join); eager localCheckpoint
+        # materializes the whole sig/band/verify pipeline ONCE — without
+        # it both branches re-derive the corpus-side artifacts (the plan
+        # audit reads the dedup's 12 scan references twice)
+        raw_statuses = ms.hold(
+            dedup.incremental_dedup(
+                increment,
+                old,
+                k=_MINHASH_K,
+                num_hashes=_MINHASH_N,
+                bands=_MINHASH_BANDS,
+                threshold=_INC_THRESHOLD,
+            )
+        )
+        statuses = ms.checkpoint(raw_statuses)
+        # the eager checkpoint has fully consumed the dedup result, so the
+        # operator's internal state — the persisted increment artifact
+        # frame AND the reference-artifact + candidate checkpoints — can
+        # be freed NOW
+        ms.release(raw_statuses)
+        dd = statuses.agg(
+            F.sum((F.col("status") == "exact_dup").cast("long")).alias(
+                "n_exact_dup"
+            ),
+            F.sum((F.col("status") == "near_dup").cast("long")).alias(
+                "n_near_dup"
+            ),
+            F.sum((F.col("status") == "novel").cast("long")).alias("n_novel"),
+        )
+        novel_ids = statuses.filter(F.col("status") == "novel").select("doc_id")
+        surv = increment.join(novel_ids, "doc_id", "left_semi").select(
+            "doc_id",
+            "source",
+            F.pmod(F.col("doc_id"), F.lit(_PACK_SHARDS)).cast("int").alias(
+                "shard"
+            ),
+            F.size(word_tokens("text")).alias("tokens"),
+        )
+        # 4. mix toward the budget, then pack per shard
+        mixed = sampling.temperature_mix(
+            surv,
+            "source",
+            temperature=_TSP_TEMP,
+            budget_fraction=_TSP_BUDGET,
+            key_col="doc_id",
+            salt=_SAMPLE_SALT,
+        )
+        packed = sampling.pack_sequences(
+            mixed.select("doc_id", "source", "shard", "tokens"),
+            token_col="tokens",
+            budget=_PACK_BUDGET,
+            shard_col="shard",
+        )
+        summary = (
+            ops.crossJoin(n_healthy).crossJoin(dd)
+        )
+        out = (
+            packed.groupBy("shard", "pack_id")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.sum("tokens").cast("long").alias("pack_tokens"),
+                F.countDistinct("source").cast("long").alias("n_sources"),
+                F.min("doc_id").cast("long").alias("first_doc"),
+                F.max("doc_id").cast("long").alias("last_doc"),
+            )
+            .crossJoin(F.broadcast(summary))
+        )
+        return ms.attach(out)
 
 
 def _crawl_refresh_oracle() -> str:

@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..operators import (
     dedup,
     hierarchy,
@@ -2706,23 +2707,21 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = rebalance(load_table(spark, sf_dir, "documents"))
     sigs = dedup.minhash_signatures(d, k=_MINHASH_K, num_hashes=_MINHASH_N)
     pairs = dedup.lsh_candidate_pairs(sigs, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS)
-    comps = connected_components(pairs, d.select("doc_id"))
-    scored = text.quality_score(d.select("doc_id", "text")).select(
-        "doc_id", "quality"
-    )
-    joined = comps.join(scored, "doc_id")
-    best = windows.rank_topk_per_group(
-        joined,
-        ["component"],
-        [F.col("quality").desc(), F.col("doc_id").asc()],
-        1,
-    )
-    out = best.select("component", F.col("doc_id").alias("kept_doc_id"), "quality")
-    # propagate the CC release hook to the query's output frame so
-    # graph.release_components(result) frees the final generation
-    out._cc_final_generation = comps._cc_final_generation
-    out._cc_checkpoint_dir = comps._cc_checkpoint_dir
-    return out
+    with materialize.scope() as ms:
+        comps = ms.hold(connected_components(pairs, d.select("doc_id")))
+        scored = text.quality_score(d.select("doc_id", "text")).select(
+            "doc_id", "quality"
+        )
+        joined = comps.join(scored, "doc_id")
+        best = windows.rank_topk_per_group(
+            joined,
+            ["component"],
+            [F.col("quality").desc(), F.col("doc_id").asc()],
+            1,
+        )
+        return ms.attach(
+            best.select("component", F.col("doc_id").alias("kept_doc_id"), "quality")
+        )
 
 
 def _keep_best_oracle() -> str:

@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -614,35 +615,34 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's x10 rehearsal cost dropped ~2× and its scaling exponent
     normalized once the double-compute was cut).  The cached frame is
     16 bytes/doc — at 100 TB corpus scale it is the SCORES that
-    persist, never the text.  The handle rides the result as
-    ``_persisted_intermediates`` (released by
-    ``graph.release_components``)."""
+    persist, never the text.  The result carries the handle until
+    ``release_components``."""
     d = rebalance(load_table(spark, sf_dir, "documents"))
     kept = dedup.exact_dedup(d)
     en = kept.filter(F.col("lang") == F.lit("en"))
-    scored = (
-        text.quality_score(en.select("doc_id", "text"))
-        .select("doc_id", "quality")
-        .persist()
-    )
-    thr = scored.agg(
-        F.round(
-            F.expr("approx_percentile(quality, 0.5, 1000000)"), 6
-        ).alias("__thr")
-    )
-    gated = scored.crossJoin(F.broadcast(thr)).filter(
-        F.col("quality") >= F.col("__thr")
-    )
-    flags = text.contamination_flags(
-        d, d.filter(F.col("doc_id") < _CONTAM_EVAL_IDS), k=_PIPE_CONTAM_K
-    )
-    out = (
-        gated.join(flags, "doc_id")
-        .filter(~F.col("contaminated"))
-        .select("doc_id", "quality")
-    )
-    out._persisted_intermediates = [scored]
-    return out
+    with materialize.scope() as ms:
+        scored = ms.hold(
+            text.quality_score(en.select("doc_id", "text"))
+            .select("doc_id", "quality")
+            .persist()
+        )
+        thr = scored.agg(
+            F.round(
+                F.expr("approx_percentile(quality, 0.5, 1000000)"), 6
+            ).alias("__thr")
+        )
+        gated = scored.crossJoin(F.broadcast(thr)).filter(
+            F.col("quality") >= F.col("__thr")
+        )
+        flags = text.contamination_flags(
+            d, d.filter(F.col("doc_id") < _CONTAM_EVAL_IDS), k=_PIPE_CONTAM_K
+        )
+        out = (
+            gated.join(flags, "doc_id")
+            .filter(~F.col("contaminated"))
+            .select("doc_id", "quality")
+        )
+        return ms.attach(out)
 
 
 def _curation_pipeline_oracle() -> str:
@@ -2825,92 +2825,88 @@ def q_training_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash64(dedup.normalized_text("text")).alias("content_hash"),
         F.length(dedup.normalized_text("text")).alias("content_len"),
     ).distinct()
-    fresh_ids = (
-        canon.withColumn(
-            "content_hash", portable_hash64(dedup.normalized_text("text"))
-        )
-        .withColumn("content_len", F.length(dedup.normalized_text("text")))
-        .join(ref_digests, ["content_hash", "content_len"], "left_anti")
-        .select("doc_id")
-        .persist()
-    )
-    fresh = d.join(fresh_ids, "doc_id", "left_semi")
-
-    # 3. quality gate at the batch 40th percentile; (doc_id, quality)
-    # persisted at the branch point — the threshold aggregate and the
-    # gate filter both read it
-    scored = (
-        text.quality_score(fresh.select("doc_id", "text"))
-        .select("doc_id", "quality")
-        .persist()
-    )
-    thr = scored.agg(
-        F.round(
-            F.expr(
-                f"approx_percentile(quality, {_TSP_QUALITY_Q}, 1000000)"
-            ),
-            6,
-        ).alias("qthr")
-    )
-    # The curated batch collapses to (doc_id, source, tokens) —
-    # ~20 bytes/doc, the text is DONE after tokenization — and is
-    # CHECKPOINTED here (eager localCheckpoint): mixing branches off
-    # it 3 ways and packing once more, and a real 100 TB shard build
-    # writes survivors between curation and packing anyway, so the
-    # stage boundary is materialized rather than recomputed 4×.  The
-    # shard key divides the ingest-split modulus out of doc_id first:
-    # the batch is doc_id % 4 == 0, so sharding on raw doc_id % 8
-    # would populate only shards {0, 4}.
-    curated = (
-        fresh.join(scored, "doc_id")
-        .crossJoin(F.broadcast(thr))
-        .filter(F.col("quality") >= F.col("qthr"))
-        .select(
-            "doc_id",
-            "source",
-            F.pmod(
-                F.floor(F.col("doc_id") / _INC_SPLIT_MOD),
-                F.lit(_PACK_SHARDS),
+    with materialize.scope() as ms:
+        fresh_ids = ms.hold(
+            canon.withColumn(
+                "content_hash", portable_hash64(dedup.normalized_text("text"))
             )
-            .cast("int")
-            .alias("shard"),
-            F.size(word_tokens("text")).alias("tokens"),
+            .withColumn("content_len", F.length(dedup.normalized_text("text")))
+            .join(ref_digests, ["content_hash", "content_len"], "left_anti")
+            .select("doc_id")
+            .persist()
         )
-        .localCheckpoint(eager=True)
-    )
-    # upstream intermediates are fully consumed by the checkpoint
-    fresh_ids.unpersist()
-    scored.unpersist()
+        fresh = d.join(fresh_ids, "doc_id", "left_semi")
 
-    # 4. temperature-scaled domain mixing over the checkpointed frame
-    mixed = sampling.temperature_mix(
-        curated,
-        "source",
-        temperature=_TSP_TEMP,
-        budget_fraction=_TSP_BUDGET,
-        key_col="doc_id",
-        salt=_SAMPLE_SALT,
-    )
+        # 3. quality gate at the batch 40th percentile; (doc_id, quality)
+        # persisted at the branch point — the threshold aggregate and the
+        # gate filter both read it
+        scored = ms.hold(
+            text.quality_score(fresh.select("doc_id", "text"))
+            .select("doc_id", "quality")
+            .persist()
+        )
+        thr = scored.agg(
+            F.round(
+                F.expr(
+                    f"approx_percentile(quality, {_TSP_QUALITY_Q}, 1000000)"
+                ),
+                6,
+            ).alias("qthr")
+        )
+        # The curated batch collapses to (doc_id, source, tokens) —
+        # ~20 bytes/doc, the text is DONE after tokenization — and is
+        # CHECKPOINTED here (eager localCheckpoint): mixing branches off
+        # it 3 ways and packing once more, and a real 100 TB shard build
+        # writes survivors between curation and packing anyway, so the
+        # stage boundary is materialized rather than recomputed 4×.  The
+        # shard key divides the ingest-split modulus out of doc_id first:
+        # the batch is doc_id % 4 == 0, so sharding on raw doc_id % 8
+        # would populate only shards {0, 4}.
+        curated = ms.checkpoint(
+            fresh.join(scored, "doc_id")
+            .crossJoin(F.broadcast(thr))
+            .filter(F.col("quality") >= F.col("qthr"))
+            .select(
+                "doc_id",
+                "source",
+                F.pmod(
+                    F.floor(F.col("doc_id") / _INC_SPLIT_MOD),
+                    F.lit(_PACK_SHARDS),
+                )
+                .cast("int")
+                .alias("shard"),
+                F.size(word_tokens("text")).alias("tokens"),
+            )
+        )
+        # upstream intermediates are fully consumed by the checkpoint
+        ms.release(fresh_ids)
+        ms.release(scored)
 
-    # 5. pack per shard, then roll up the manifest
-    packed = sampling.pack_sequences(
-        mixed.select("doc_id", "source", "shard", "tokens"),
-        token_col="tokens",
-        budget=_PACK_BUDGET,
-        shard_col="shard",
-    )
-    out = packed.groupBy("shard", "pack_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("tokens").cast("long").alias("pack_tokens"),
-        F.countDistinct("source").cast("long").alias("n_sources"),
-        F.min("doc_id").cast("long").alias("first_doc"),
-        F.max("doc_id").cast("long").alias("last_doc"),
-    )
-    # localCheckpoints are NOT freed by DataFrame.unpersist() — they
-    # ride _extra_ckpts so release_components goes through
-    # _release_local_checkpoint (the graph-operator convention)
-    out._extra_ckpts = [curated]
-    return out
+        # 4. temperature-scaled domain mixing over the checkpointed frame
+        mixed = sampling.temperature_mix(
+            curated,
+            "source",
+            temperature=_TSP_TEMP,
+            budget_fraction=_TSP_BUDGET,
+            key_col="doc_id",
+            salt=_SAMPLE_SALT,
+        )
+
+        # 5. pack per shard, then roll up the manifest
+        packed = sampling.pack_sequences(
+            mixed.select("doc_id", "source", "shard", "tokens"),
+            token_col="tokens",
+            budget=_PACK_BUDGET,
+            shard_col="shard",
+        )
+        out = packed.groupBy("shard", "pack_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("tokens").cast("long").alias("pack_tokens"),
+            F.countDistinct("source").cast("long").alias("n_sources"),
+            F.min("doc_id").cast("long").alias("first_doc"),
+            F.max("doc_id").cast("long").alias("last_doc"),
+        )
+        return ms.attach(out)
 
 
 def _training_shard_oracle() -> str:
@@ -3034,7 +3030,7 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``release_components``); eval grams broadcast; the split is a pure
     expression on the component id; the manifest is one hash
     aggregate.  The corpus text never shuffles."""
-    from ..operators.graph import connected_components, release_components
+    from ..operators.graph import connected_components
 
     d = rebalance(load_table(spark, sf_dir, "documents"))
     sigs = dedup.minhash_signatures(d, k=_MINHASH_K, num_hashes=_MINHASH_N)
@@ -3050,62 +3046,34 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.6): the contamination gram pass (~1 s warm at
     # sf0.1) is independent of the LSH→CC chain (~2 s of sequential
     # driver-blocked rounds) and they only meet at the quarantine
-    # join — materialize the contaminated-doc id list from a
-    # background thread so its one job back-fills cores the CC
-    # rounds leave idle.  Submitted BEFORE the CC loop starts so it
-    # plans while AQE is still on (the CC fast-round bypass briefly
-    # toggles the session conf).  Release-on-failure mirrors the
-    # source_health pool discipline.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            lambda: contam.filter(F.col("contaminated"))
-            .select("doc_id")
-            .localCheckpoint(eager=True)
+    # join — materialize the contaminated-doc id list in the
+    # background so its one job back-fills cores the CC rounds leave
+    # idle.
+    with materialize.scope() as ms:
+        fut = ms.background(contam.filter(F.col("contaminated")).select("doc_id"))
+        comps = ms.hold(connected_components(pairs, d.select("doc_id")))
+        contam_ids = fut.result()
+        bad = (
+            comps.join(contam_ids, "doc_id", "left_semi")
+            .select("component")
+            .distinct()
         )
-        try:
-            comps = connected_components(pairs, d.select("doc_id"))
-        except BaseException:
-            try:
-                _release_local_checkpoint(fut.result())
-            except BaseException:
-                pass
-            raise
-        try:
-            contam_ids = fut.result()
-        except BaseException:
-            release_components(comps)
-            raise
-    bad = (
-        comps.join(contam_ids, "doc_id", "left_semi")
-        .select("component")
-        .distinct()
-    )
-    clean = comps.join(bad, "component", "left_anti")
-    split = sampling.hash_split(
-        clean, "component", splits=(("train", 90), ("val", 5), ("test", 5))
-    )
-    toks = text.token_counts(d.select("doc_id", "source", "text")).select(
-        "doc_id", "source", "ws_tokens"
-    )
-    out = (
-        split.join(toks, "doc_id")
-        .groupBy("split", "source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("component").cast("long").alias("n_clusters"),
-            F.sum("ws_tokens").cast("long").alias("n_tokens"),
+        clean = comps.join(bad, "component", "left_anti")
+        split = sampling.hash_split(
+            clean, "component", splits=(("train", 90), ("val", 5), ("test", 5))
         )
-    )
-    # propagate the CC release hook (the q_dedup_keep_best convention)
-    # plus the overlapped contamination checkpoint
-    out._cc_final_generation = comps._cc_final_generation
-    out._cc_checkpoint_dir = comps._cc_checkpoint_dir
-    out._extra_ckpts = [contam_ids]
-    return out
+        toks = text.token_counts(d.select("doc_id", "source", "text")).select(
+            "doc_id", "source", "ws_tokens"
+        )
+        return ms.attach(
+            split.join(toks, "doc_id")
+            .groupBy("split", "source")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_docs"),
+                F.countDistinct("component").cast("long").alias("n_clusters"),
+                F.sum("ws_tokens").cast("long").alias("n_tokens"),
+            )
+        )
 
 
 def _eval_safe_split_oracle() -> str:

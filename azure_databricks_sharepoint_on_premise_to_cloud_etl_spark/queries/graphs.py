@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -253,26 +254,23 @@ def q_dedup_canonical_by_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.lsh_candidate_pairs(
         sigs, num_hashes=_MINHASH_N, bands=_MINHASH_BANDS
     )
-    comp = connected_components(pairs, d.select("doc_id"))
-    joined = comp.join(d.select("doc_id", "n_chars"), "doc_id")
-    wc = Window.partitionBy("component")
-    wr = wc.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    ranked = joined.select(
-        "*",
-        F.row_number().over(wr).alias("__rn"),
-        F.count(F.lit(1)).over(wc).alias("n_docs"),
-    )
-    out = ranked.filter((F.col("__rn") == 1) & (F.col("n_docs") > 1)).select(
-        "component",
-        F.col("doc_id").alias("canonical_doc"),
-        "n_docs",
-        F.col("n_chars").alias("kept_chars"),
-    )
-    # propagate the CC release handle so bench/long-lived sessions can
-    # free the final checkpointed generation (release_components)
-    out._cc_final_generation = comp._cc_final_generation
-    out._cc_checkpoint_dir = comp._cc_checkpoint_dir
-    return out
+    with materialize.scope() as ms:
+        comp = ms.hold(connected_components(pairs, d.select("doc_id")))
+        joined = comp.join(d.select("doc_id", "n_chars"), "doc_id")
+        wc = Window.partitionBy("component")
+        wr = wc.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
+        ranked = joined.select(
+            "*",
+            F.row_number().over(wr).alias("__rn"),
+            F.count(F.lit(1)).over(wc).alias("n_docs"),
+        )
+        out = ranked.filter((F.col("__rn") == 1) & (F.col("n_docs") > 1)).select(
+            "component",
+            F.col("doc_id").alias("canonical_doc"),
+            "n_docs",
+            F.col("n_chars").alias("kept_chars"),
+        )
+        return ms.attach(out)
 
 
 def _canonical_by_size_oracle() -> str:
@@ -777,7 +775,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint over the id-level pair set (dedup.fuzzy_name_pairs'
     contract), pinning the collapsed form against the expanded one."""
     from ..functions import normalize_text
-    from ..operators.graph import connected_components, release_components
+    from ..operators.graph import connected_components
 
     p = rebalance(load_table(spark, sf_dir, "part")).select("p_partkey", "p_name")
     # Value-collapsed closure: blocking, the banded levenshtein verify
@@ -817,35 +815,36 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_a", "id_b")
     )
-    comp = connected_components(
-        edges, nmap.select(F.col("__node").alias("p_partkey")),
-        node_col="p_partkey",
-    )
-    name_comp = nmap.join(
-        comp, nmap["__node"] == comp["p_partkey"]
-    ).select("__name", "component")
-    out = (
-        ids.join(name_comp, "__name", "left")
-        # NULL-named rows never pair/block: they stay their own entity
-        .withColumn("component", F.coalesce("component", F.col("__id")))
-        .join(
-            F.broadcast(
-                p.select(
-                    F.col("p_partkey").alias("component"),
-                    F.col("p_name").alias("canonical_name"),
-                )
-            ),
-            "component",
+    with materialize.scope() as ms:
+        comp = ms.hold(
+            connected_components(
+                edges, nmap.select(F.col("__node").alias("p_partkey")),
+                node_col="p_partkey",
+            )
         )
-        .select(
-            F.col("__id").alias("p_partkey"),
-            F.col("component").alias("entity_id"),
-            "canonical_name",
+        name_comp = nmap.join(
+            comp, nmap["__node"] == comp["p_partkey"]
+        ).select("__name", "component")
+        out = (
+            ids.join(name_comp, "__name", "left")
+            # NULL-named rows never pair/block: they stay their own entity
+            .withColumn("component", F.coalesce("component", F.col("__id")))
+            .join(
+                F.broadcast(
+                    p.select(
+                        F.col("p_partkey").alias("component"),
+                        F.col("p_name").alias("canonical_name"),
+                    )
+                ),
+                "component",
+            )
+            .select(
+                F.col("__id").alias("p_partkey"),
+                F.col("component").alias("entity_id"),
+                "canonical_name",
+            )
         )
-    )
-    out._cc_final_generation = getattr(comp, "_cc_final_generation", None)
-    out._cc_checkpoint_dir = getattr(comp, "_cc_checkpoint_dir", None)
-    return out
+        return ms.attach(out)
 
 
 def _entity_resolution_oracle() -> str:
@@ -2883,34 +2882,30 @@ def q_entity_resolution_sn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.trim(F.lower(F.col("p_name"))), r"\s+", " "
         ).alias("__name"),
     )
-    cand = sorted_neighborhood_pairs(
-        p, "p_partkey", "__name", window=_SN_WINDOW
-    )
-    pairs = cand.filter(
-        F.levenshtein("key_a", "key_b", _SN_MAX_DIST) >= 0
-    ).select("id_a", "id_b")
-    comp = connected_components(
-        pairs, p.select("p_partkey"), node_col="p_partkey"
-    )
-    out = comp.join(
-        F.broadcast(
-            p.select(
-                F.col("p_partkey").alias("component"),
-                F.col("__name").alias("canonical_name"),
-            )
-        ),
-        "component",
-    ).select(
-        "p_partkey",
-        F.col("component").alias("entity_id"),
-        "canonical_name",
-    )
-    out._cc_final_generation = getattr(comp, "_cc_final_generation", None)
-    out._cc_checkpoint_dir = getattr(comp, "_cc_checkpoint_dir", None)
-    out._persisted_intermediates = getattr(
-        cand, "_persisted_intermediates", None
-    )
-    return out
+    with materialize.scope() as ms:
+        cand = ms.hold(
+            sorted_neighborhood_pairs(p, "p_partkey", "__name", window=_SN_WINDOW)
+        )
+        pairs = cand.filter(
+            F.levenshtein("key_a", "key_b", _SN_MAX_DIST) >= 0
+        ).select("id_a", "id_b")
+        comp = ms.hold(
+            connected_components(pairs, p.select("p_partkey"), node_col="p_partkey")
+        )
+        out = comp.join(
+            F.broadcast(
+                p.select(
+                    F.col("p_partkey").alias("component"),
+                    F.col("__name").alias("canonical_name"),
+                )
+            ),
+            "component",
+        ).select(
+            "p_partkey",
+            F.col("component").alias("entity_id"),
+            "canonical_name",
+        )
+        return ms.attach(out)
 
 
 ORACLE_ENTITY_RESOLUTION_SN = f"""

@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -2465,23 +2466,23 @@ def q_quality_deciles_distributed(
         "doc_id", "text"
     )
     q = text.quality_score(d).select("doc_id", "quality")
-    out = win.global_ntile_pct(
-        q,
-        [F.col("quality").desc(), F.col("doc_id").asc()],
-        10,
-        tile_col="decile",
-        pct_col="__pct",
-    )
-    res = out.select(
-        "doc_id",
-        "quality",
-        "decile",
-        F.round("__pct", 6).alias("pct_rank"),
-    )
-    # propagate the staged-frame cache handle so the bench/driver's
-    # release_components call frees it (select() builds a new frame)
-    res._persisted_intermediates = out._persisted_intermediates
-    return res
+    with materialize.scope() as ms:
+        out = ms.hold(
+            win.global_ntile_pct(
+                q,
+                [F.col("quality").desc(), F.col("doc_id").asc()],
+                10,
+                tile_col="decile",
+                pct_col="__pct",
+            )
+        )
+        res = out.select(
+            "doc_id",
+            "quality",
+            "decile",
+            F.round("__pct", 6).alias("pct_rank"),
+        )
+        return ms.attach(res)
 
 
 def q_roc_auc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:

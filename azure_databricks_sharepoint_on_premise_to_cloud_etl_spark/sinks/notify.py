@@ -32,7 +32,9 @@ class CapturingMailer:
 
 
 def smtp_mailer(host: str, port: int = 25) -> Callable[[EmailMessage], None]:
-    """Real SMTP sender (import-guarded; never used in tests)."""
+    """Real SMTP sender: the production transport for the reference's
+    HTML failure/expiration e-mails (see module docstring).  Never
+    used in tests, which inject :class:`CapturingMailer` instead."""
 
     def send(msg: EmailMessage) -> None:  # pragma: no cover - needs a server
         import smtplib

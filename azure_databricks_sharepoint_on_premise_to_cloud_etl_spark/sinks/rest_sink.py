@@ -20,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import materialize
 from ..operators.batching import BatchReport, run_batched_with_retry
 
 # transport(url, json_body) -> (status_code, response_text)
@@ -141,7 +142,8 @@ def post_rows_distributed(
     ledger = df.mapInPandas(
         run, schema="n_posted LONG, failed_row STRING, error STRING"
     )
-    return ledger.localCheckpoint(eager=True)
+    with materialize.scope() as ms:
+        return ms.attach(ms.checkpoint(ledger))
 
 
 def post_then_audit_distributed(

@@ -88,11 +88,6 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Scan every testdata table into a dict keyed by name."""
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def register_temp_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TPCH_TABLES
 ) -> None:

@@ -32,6 +32,9 @@ def main() -> int:
     import duckdb
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.materialize import (
+        release_components,
+    )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -84,6 +87,7 @@ def main() -> int:
             "err": None,
         }
         t0 = time.time()
+        sdf = None
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -95,6 +99,9 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: {e}")
             continue
+        finally:
+            if sdf is not None:
+                release_components(sdf)
         if name not in q.AUX_ORACLES:
             rec["oracle"] = False
             ok = len(srows) > 0

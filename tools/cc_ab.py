@@ -3,9 +3,9 @@
 Runs q_dedup_components warm (same materialization as bench.py) with
 the fast_round_threshold bypass ON (default 100k) vs OFF (0), several
 reps each, interleaved to cancel host-load drift, and prints per-rep
-times, job counts, and CC_DEBUG round timings.
+times and job counts.
 
-Usage: CC_DEBUG=1 python tools/cc_ab.py [reps]
+Usage: python tools/cc_ab.py [reps]
 """
 import os
 import sys

@@ -654,6 +654,7 @@ def _curation_stages():
     from pyspark.sql import functions as F
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.materialize import scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import (
         dedup,
         text,
@@ -670,21 +671,22 @@ def _curation_stages():
         # double-compute this row diagnosed)
         d = q.rebalance(q.load_table(spark, sf_dir, "documents"))
         en = dedup.exact_dedup(d).filter(F.col("lang") == F.lit("en"))
-        scored = (
-            text.quality_score(en.select("doc_id", "text"))
-            .select("doc_id", "quality")
-            .persist()
-        )
-        thr = scored.agg(
-            F.round(
-                F.expr("approx_percentile(quality, 0.5, 1000000)"), 6
-            ).alias("__thr")
-        )
-        out = scored.crossJoin(F.broadcast(thr)).filter(
-            F.col("quality") >= F.col("__thr")
-        )
-        out._persisted_intermediates = [scored]
-        return out
+        with scope() as ms:
+            scored = ms.hold(
+                text.quality_score(en.select("doc_id", "text"))
+                .select("doc_id", "quality")
+                .persist()
+            )
+            thr = scored.agg(
+                F.round(
+                    F.expr("approx_percentile(quality, 0.5, 1000000)"), 6
+                ).alias("__thr")
+            )
+            return ms.attach(
+                scored.crossJoin(F.broadcast(thr)).filter(
+                    F.col("quality") >= F.col("__thr")
+                )
+            )
 
     def stage_contamination(spark, sf_dir):
         d = q.rebalance(q.load_table(spark, sf_dir, "documents"))

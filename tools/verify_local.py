@@ -44,6 +44,9 @@ def table_digest(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     import duckdb
 
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.materialize import (
+        release_components,
+    )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
@@ -67,6 +70,7 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        sdf = None
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -75,6 +79,9 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            if sdf is not None:
+                release_components(sdf)
         spark_s = time.time() - t0
         if name not in oracles:
             print(f"SKIP-ORACLE {name}: rows={len(srows)} ({spark_s:.1f}s)")
