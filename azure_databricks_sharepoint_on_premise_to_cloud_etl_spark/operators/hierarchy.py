@@ -7,10 +7,9 @@ We keep those union-of-joins semantics (SURVEY 7.5 risk 1 pins the NEW
 variant: union all levels then distinct, no per-level filtering) but
 with native prefix expressions instead of the reference's Python UDFs.
 
-Scale: the zone/dim side is small -> broadcast all three joins; the
-fact side is scanned once per level.  For a truly large dim, switch to
-the exploded-prefix-key single join (``fallback_join_exploded``):
-one shuffle join on a single composite key instead of three passes.
+Scale: the levels become one exploded-candidate-key join against the
+broadcast zone side, so the fact side is scanned once, not once per
+level.
 """
 
 from __future__ import annotations
@@ -34,44 +33,14 @@ def hierarchical_fallback_join(
     Level 0 (exact): fact.path == dim.path;
     level k: prefix_path(fact.path, k) == dim.path — a zone defined at
     cost-center level matches every location under it.
-    """
-    d = dims.withColumnRenamed(dim_path_col, "__dim_path")
-    joined = [
-        facts.join(
-            F.broadcast(d), facts[fact_path_col] == d["__dim_path"], "inner"
-        )
-    ]
-    for lv in levels:
-        joined.append(
-            facts.join(
-                F.broadcast(d),
-                prefix_path(facts[fact_path_col], lv) == d["__dim_path"],
-                "inner",
-            )
-        )
-    out = joined[0]
-    for j in joined[1:]:
-        out = out.unionByName(j)
-    return out.drop("__dim_path").distinct()
 
-
-def fallback_join_exploded(
-    facts: DataFrame,
-    dims: DataFrame,
-    fact_path_col: str,
-    dim_path_col: str,
-    levels: tuple[int, ...] = (4, 5),
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Same semantics as :func:`hierarchical_fallback_join` as ONE join:
-    explode each fact into its candidate keys (exact + each prefix),
-    equi-join once on the candidate key, distinct.
-
-    One pass over facts instead of N join passes.  ``broadcast_dims``
-    (default: zone tables are dimension-sized) pins the broadcast-hash
-    strategy — dims built from aggregates have no stats, and Catalyst
-    would otherwise fall back to a sort-merge join; pass False for a
-    genuinely large dim side to get the shuffle join.
+    Computed as ONE join: each fact explodes into its distinct
+    candidate keys (its path and each prefix), one equi-join on the
+    candidate key, then distinct — one scan of facts instead of one
+    per level, same rows as the union of the per-level joins.  The dim
+    side is broadcast: zone tables are dimension-sized, and dims built
+    from aggregates carry no size statistics, so Catalyst would
+    otherwise pick a sort-merge join.
     """
     cands = F.array_distinct(
         F.array(
@@ -80,9 +49,7 @@ def fallback_join_exploded(
         )
     )
     exploded = facts.withColumn("__cand", F.explode(cands))
-    d = dims.withColumnRenamed(dim_path_col, "__cand")
-    if broadcast_dims:
-        d = F.broadcast(d)
+    d = F.broadcast(dims.withColumnRenamed(dim_path_col, "__cand"))
     return exploded.join(d, "__cand", "inner").drop("__cand").distinct()
 
 

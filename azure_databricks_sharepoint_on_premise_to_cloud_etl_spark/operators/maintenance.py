@@ -14,7 +14,7 @@ import math
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -55,14 +55,18 @@ def retention_delete(
     """M2 retention (code/ukg_tbl_optmztn.py:39-60): drop rows older
     than the retention window.  Parquet has no row-level DELETE, so
     this is a filtered rewrite; on Delta it becomes
-    ``DELETE FROM t WHERE ts < cutoff``.  Returns rows kept."""
+    ``DELETE FROM t WHERE ts < cutoff``.  Returns rows kept, counted
+    by an ``Observation`` on the rewrite itself (no re-read)."""
     now = now or _dt.datetime.now(_dt.timezone.utc)
     cutoff = (now - _dt.timedelta(days=retention_days)).replace(tzinfo=None)
     df = spark.read.parquet(table_path)
-    kept = df.filter(F.col(ts_col) >= F.lit(cutoff))
+    kept_rows = Observation("retention_kept")
+    kept = df.filter(F.col(ts_col) >= F.lit(cutoff)).observe(
+        kept_rows, F.count(F.lit(1)).alias("n")
+    )
     tmp = table_path.rstrip("/") + ".__retention_tmp"
     kept.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    n = kept_rows.get["n"]
     shutil.rmtree(table_path)
     os.rename(tmp, table_path)
     return n

@@ -4792,6 +4792,13 @@ def brier_decomposition(
     ``brier = rel − res + unc + wb`` to rounding.
 
     Scale shape: one (bin)-keyed aggregate (k rows), one reduce.
+    Forecasts and outcomes ride as exact nano-unit integers, so every
+    per-bin moment is an exact decimal sum, and the k per-bin terms
+    are summed as decimals too: no result depends on how rows or bins
+    are split across partitions (a double sum's order can move a
+    value sitting on a rounding boundary — sf0.01's Brier score is
+    exactly 0.3332215).  The Brier score itself is one exact decimal
+    division, rounded half-up.
 
     Returns one row: (n, base_rate, brier, reliability, resolution,
     uncertainty, within_bin_var).
@@ -4799,6 +4806,7 @@ def brier_decomposition(
     if n_bins < 2:
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
     k = int(n_bins)
+    unit = 1_000_000_000
     pr = F.col(prob_col).cast("double")
     y = F.col(outcome_col).cast("double")
     base = df.filter(
@@ -4807,44 +4815,42 @@ def brier_decomposition(
         F.least(F.floor(pr * k).cast("int"), F.lit(k - 1)).alias(
             "__b"
         ),
-        pr.alias("__p"),
-        y.alias("__y"),
+        F.round(pr * unit).cast("decimal(38,0)").alias("__p"),
+        F.round(y * unit).cast("decimal(38,0)").alias("__y"),
     )
+    err = F.col("__p") - F.col("__y")
     bins = base.groupBy("__b").agg(
         F.count(F.lit(1)).alias("__n"),
-        F.avg("__p").alias("__fp"),
-        F.avg("__y").alias("__oy"),
-        F.avg(F.col("__p") * F.col("__p")).alias("__fp2"),
-        F.avg((F.col("__p") - F.col("__y")) * (F.col("__p") - F.col("__y"))).alias(
-            "__bs"
-        ),
+        F.sum("__p").alias("__sp"),
+        F.sum("__y").alias("__sy"),
+        F.sum(F.col("__p") * F.col("__p")).alias("__sp2"),
+        F.sum(err * err).alias("__sbs"),
     )
+    # per-bin means in doubles, computed from exact sums (so each term
+    # is the same on any layout), then summed across bins as decimals
+    n_b = F.col("__n").cast("double")
+    fp = F.col("__sp").cast("double") / n_b / unit
+    oy = F.col("__sy").cast("double") / n_b / unit
+    fp2 = F.col("__sp2").cast("double") / n_b / (unit * unit)
+
+    def exact_sum(term):
+        return F.sum(term.cast("decimal(38,18)")).cast("double")
+
+    nn = F.sum("__n")
+    so = F.sum("__sy").cast("double") / unit
     red = bins.agg(
-        F.sum("__n").cast("long").alias("n"),
+        nn.cast("long").alias("n"),
+        F.round(so / nn, 9).alias("__obar"),
         F.round(
-            F.sum(F.col("__n") * F.col("__oy")) / F.sum("__n"), 9
-        ).alias("__obar"),
-        F.round(
-            F.sum(F.col("__n") * F.col("__bs")) / F.sum("__n"), 6
-        ).alias("brier"),
-        F.round(
-            F.sum(
-                F.col("__n")
-                * (F.col("__fp") - F.col("__oy"))
-                * (F.col("__fp") - F.col("__oy"))
-            )
-            / F.sum("__n"),
-            6,
-        ).alias("reliability"),
-        F.sum(F.col("__n") * F.col("__oy")).alias("__so"),
-        F.sum(
-            F.col("__n")
-            * (F.col("__fp2") - F.col("__fp") * F.col("__fp"))
-        ).alias("__swb"),
-        F.sum(F.col("__n") * F.col("__oy") * F.col("__oy")).alias(
-            "__so2w"
+            F.sum("__sbs") / (nn.cast("decimal(38,0)") * (unit * unit)), 6
+        ).cast("double").alias("brier"),
+        F.round(exact_sum(n_b * (fp - oy) * (fp - oy)) / nn, 6).alias(
+            "reliability"
         ),
-        F.sum(F.col("__n")).alias("__nn"),
+        so.alias("__so"),
+        exact_sum(n_b * (fp2 - fp * fp)).alias("__swb"),
+        exact_sum(n_b * oy * oy).alias("__so2w"),
+        nn.alias("__nn"),
     )
     obar = F.col("__obar")
     res = F.round(

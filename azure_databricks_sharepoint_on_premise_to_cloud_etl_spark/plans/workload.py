@@ -79,6 +79,11 @@ def ingest_workload(
     )
     doc_df = json_documents_df(spark, docs, WORKLOAD_SCHEMA)
     master, child = normalize_workload(doc_df)
+    # The master and child writes each parse the documents.
+    # Checkpointing doc_df so both share one parse measured as a loss
+    # (first etl_cycle pass 6.4-7.0 s against 5.7-5.9 s on a 4-vCPU
+    # host): the parse of a cycle's documents costs less than the
+    # extra checkpoint job.
     append_versioned(master, master_path, run_id=run_id, now=now)
     append_versioned(child, child_path, run_id=run_id, now=now)
     return master, child, report

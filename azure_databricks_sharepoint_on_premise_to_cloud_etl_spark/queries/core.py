@@ -475,36 +475,41 @@ _LOC_SQL = """
 def q_hierarchical_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4/U1/U2: exact -> prefix-5 -> prefix-4 fallback join with
     native prefix expressions in the join keys (no UDF — codegen +
-    hash-partitionable).  Uses the single-pass exploded-key form
-    (one scan of facts, one join) — proven row-equivalent to the
-    union-of-3-joins form in tests/test_operators.py; facts cached
-    since the dim levels derive from it 3 ways."""
-    facts = _location_facts(spark, sf_dir).cache()
-    exact = facts.filter(F.col("c_custkey") % 11 == 0).select(
-        F.col("location").alias("zone_loc"), F.lit("exact").alias("zone_lvl")
-    )
+    hash-partitionable).  ``hierarchy.hierarchical_fallback_join`` is
+    the single-pass exploded-key form (one scan of facts, one join),
+    checked row-for-row against an inline union-of-3-joins reference in
+    tests/test_operators.py.  facts is cached since the dim levels
+    derive from it 3 ways; the cache is attached to the result, so
+    ``release_components`` frees it after the caller consumed it."""
     from ..functions import prefix_path
 
-    lvl5 = (
-        facts.filter(F.col("c_custkey") % 5 == 0)
-        .select(prefix_path("location", 5).alias("zone_loc"))
-        .distinct()
-        .withColumn("zone_lvl", F.lit("lvl5"))
-    )
-    lvl4 = (
-        facts.filter(F.col("c_custkey") % 2 == 0)
-        .select(prefix_path("location", 4).alias("zone_loc"))
-        .distinct()
-        .withColumn("zone_lvl", F.lit("lvl4"))
-    )
-    dims = exact.unionByName(lvl5).unionByName(lvl4)
-    joined = hierarchy.fallback_join_exploded(
-        facts, dims, "location", "zone_loc", levels=(4, 5)
-    )
-    return joined.groupBy("zone_lvl").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct(F.col("c_custkey")).alias("n_custs"),
-    )
+    with materialize.scope() as ms:
+        facts = ms.hold(_location_facts(spark, sf_dir).cache())
+        exact = facts.filter(F.col("c_custkey") % 11 == 0).select(
+            F.col("location").alias("zone_loc"), F.lit("exact").alias("zone_lvl")
+        )
+        lvl5 = (
+            facts.filter(F.col("c_custkey") % 5 == 0)
+            .select(prefix_path("location", 5).alias("zone_loc"))
+            .distinct()
+            .withColumn("zone_lvl", F.lit("lvl5"))
+        )
+        lvl4 = (
+            facts.filter(F.col("c_custkey") % 2 == 0)
+            .select(prefix_path("location", 4).alias("zone_loc"))
+            .distinct()
+            .withColumn("zone_lvl", F.lit("lvl4"))
+        )
+        dims = exact.unionByName(lvl5).unionByName(lvl4)
+        joined = hierarchy.hierarchical_fallback_join(
+            facts, dims, "location", "zone_loc", levels=(4, 5)
+        )
+        return ms.attach(
+            joined.groupBy("zone_lvl").agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count_distinct(F.col("c_custkey")).alias("n_custs"),
+            )
+        )
 
 
 ORACLE_HIERARCHICAL = f"""

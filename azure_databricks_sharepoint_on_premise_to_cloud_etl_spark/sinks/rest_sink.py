@@ -74,10 +74,22 @@ def post_then_audit(
     batch_size: int = 20,
 ) -> PostResult:
     """R6 ordering (code/ukg_open_census.py:754-763): POST first; the
-    audit write runs only if every batch ultimately succeeded."""
-    result = post_rows(df, url, transport, batch_size)
-    if result.report.ok:
-        write_audit(df)
+    audit write runs only if every batch ultimately succeeded.
+
+    One materialization: ``df`` is computed once, into a checkpoint
+    that both the POST and the audit read, so the audited rows are
+    exactly the rows that were POSTed — a nondeterministic frame (a
+    ``rand()`` column, a shuffle whose partitioning a concurrent conf
+    change moves) cannot audit rows that differ from the posted ones,
+    and the plan does not run twice.  The checkpoint is freed when
+    this call returns or raises, so ``write_audit`` must consume the
+    frame (write it, collect it) before it returns; a lazy frame it
+    keeps for later would read freed blocks."""
+    with materialize.scope() as ms:
+        frozen = ms.checkpoint(df)
+        result = post_rows(frozen, url, transport, batch_size)
+        if result.report.ok:
+            write_audit(frozen)
     return result
 
 

@@ -60,8 +60,23 @@ def json_documents_df(
     Replaces ``spark.read.json(sc.parallelize([response.text]))``
     (code/ukg_open_census_old.py:96) — from_json with an explicit
     schema is deterministic and skips the inference scan.
+
+    The strings enter Spark as one pandas column over the Arrow path
+    (on in ``session.py``), so the JVM reads them directly: no pickled
+    ``PythonRDD`` and no Python worker.  The frame is lazy: each action
+    on it, or on what ``normalize_*`` derives from it, parses the
+    documents again.  Where one parse must feed several consumers, the
+    one-materialization rule of ``sinks.rest_sink.post_then_audit``
+    applies: checkpoint it in a scope, and every consumer (an audit
+    writer too) reads it before the scope exits.  An empty
+    ``documents`` list gives an empty frame with the same ``doc``
+    schema.
     """
-    df = spark.createDataFrame([(d,) for d in documents], "raw STRING")
+    import pandas as pd
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"raw": pd.Series(documents, dtype=object)}), "raw STRING"
+    )
     return df.select(F.from_json(F.col("raw"), schema).alias("doc"))
 
 

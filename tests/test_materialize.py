@@ -190,6 +190,23 @@ def test_release_components_frees_by_kind(spark, tmp_path):
     assert not any(p.is_file() for p in cpdir.rglob("*"))
 
 
+def test_hierarchical_fallback_frees_its_facts_cache(spark):
+    """The query's cached facts ride on its result and are freed by
+    ``release_components`` once the result is consumed."""
+    from conftest import SF_DIR
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.core import (
+        q_hierarchical_fallback,
+    )
+
+    before = _storage(spark)
+    out = q_hierarchical_fallback(spark, SF_DIR)
+    assert out.count() > 0
+    assert _storage(spark) > before
+    assert materialize.release_components(out)
+    assert _storage(spark) == before
+
+
 def test_materialization_has_one_owner():
     """Outside materialize.py no module checkpoints, builds a thread
     pool or forwards release attributes by hand, and the AQE flag is

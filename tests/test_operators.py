@@ -100,17 +100,49 @@ def test_hierarchical_fallback_join_levels(spark):
 
 
 def test_fallback_join_exploded_equivalent(spark):
+    """The single exploded-key join returns exactly the rows (and
+    columns, in order) of the union of one join per level, then
+    distinct — the reference's three-join form, written out here.
+    Covers a NULL path, a path shorter than a level, a duplicate fact,
+    and a fact matching at several levels."""
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.functions import (
+        prefix_path,
+    )
+
     facts = spark.createDataFrame(
-        [("c1", "org/e/ny/cc1/u1/d1"), ("c2", "org/e/ny/cc2/u9/d9")],
+        [
+            ("c1", "org/e/ny/cc1/u1/d1"), ("c2", "org/e/ny/cc2/u9/d9"),
+            ("c2", "org/e/ny/cc2/u9/d9"), ("c3", "org/e/ny"),
+            ("c4", None), ("c5", "org/w/sf/cc7/u2/d4"),
+        ],
         "k STRING, loc STRING",
     )
     dims = spark.createDataFrame(
-        [("org/e/ny/cc1/u1/d1", "exact"), ("org/e/ny/cc2", "lvl4")],
+        [
+            ("org/e/ny/cc1/u1/d1", "exact"), ("org/e/ny/cc1", "lvl4"),
+            ("org/e/ny/cc1/u1", "lvl5"), ("org/e/ny/cc2", "lvl4"),
+            ("org/e/ny", "short"), (None, "null"),
+        ],
         "zone STRING, lvl STRING",
     )
-    a = hierarchy.hierarchical_fallback_join(facts, dims, "loc", "zone")
-    b = hierarchy.fallback_join_exploded(facts, dims, "loc", "zone")
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
+    levels = (4, 5)
+    d = dims.withColumnRenamed("zone", "__dim_path")
+    ref = facts.join(F.broadcast(d), facts["loc"] == d["__dim_path"])
+    for lv in levels:
+        ref = ref.unionByName(
+            facts.join(
+                F.broadcast(d), prefix_path(facts["loc"], lv) == d["__dim_path"]
+            )
+        )
+    ref = ref.drop("__dim_path").distinct()
+    out = hierarchy.hierarchical_fallback_join(facts, dims, "loc", "zone", levels)
+    assert out.columns == ref.columns == ["k", "loc", "lvl"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert {(k, lvl) for k, _, lvl in got} == {
+        ("c1", "exact"), ("c1", "lvl4"), ("c1", "lvl5"), ("c2", "lvl4"),
+        ("c3", "short"),
+    }
 
 
 def test_interval_containment_join(spark):

@@ -133,6 +133,12 @@ def test_retention_delete(spark, tmp_path):
     )
     assert kept == 1
     assert spark.read.parquet(path).first()["v"] == 2
+    # every remaining row past retention: nothing kept, table empty
+    later = NOW + dt.timedelta(days=100)
+    assert maintenance.retention_delete(
+        spark, path, retention_days=30, now=later
+    ) == 0
+    assert spark.read.parquet(path).count() == 0
 
 
 def test_entry_contract(spark):

@@ -85,3 +85,21 @@ def test_brier_constant_base_rate_forecaster(spark):
     assert r["brier"] == pytest.approx(0.25, abs=1e-6)
     with pytest.raises(ValueError, match="n_bins"):
         brier_decomposition(df, "p", "y", n_bins=1)
+
+
+def test_brier_exact_on_any_partitioning(spark):
+    # sum (p - y)^2 = 4.55 over 32 rows: the Brier score is exactly
+    # 0.1421875, on the 6-dp rounding boundary, so it must round
+    # half-up to 0.142188 however the rows are split
+    rows = (
+        [(0.3, 1)] * 5 + [(0.7, 0)] * 3 + [(0.1, 0)] * 11
+        + [(0.9, 1)] * 7 + [(0.2, 0)] * 5 + [(0.5, 1)]
+    )
+    df = spark.createDataFrame(rows, "p DOUBLE, y INT")
+    got = {
+        tuple(brier_decomposition(df.repartition(n), "p", "y").collect()[0])
+        for n in (1, 3, 7, 13)
+    }
+    assert len(got) == 1
+    r = brier_decomposition(df, "p", "y").collect()[0]
+    assert r["brier"] == 0.142188

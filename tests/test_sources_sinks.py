@@ -4,6 +4,10 @@ import datetime as dt
 import json
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.plans import workload
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sinks import notify, writers
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sinks.rest_sink import (
     post_rows,
@@ -181,6 +185,91 @@ def test_post_success_gated_audit(spark, tmp_path):
                           batch_size=2)
     # R6: no audit write when any batch ultimately failed
     assert not res.report.ok and wrote == []
+
+
+def _storage(spark) -> int:
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_post_then_audit_audits_exactly_the_posted_rows(spark, tmp_path):
+    """The audit holds the rows that were POSTed, even for a frame
+    whose values move between evaluations: rand() after a shuffle
+    depends on the partitioning, and here another thread of the same
+    session changes the shuffle-partition count while the POST runs.
+    Computing the frame once for both sinks keeps them equal."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    df = spark.range(0, 200, 1, 4).repartition("id").withColumn("r", F.rand())
+    posted = []
+
+    def transport(url, body):
+        posted.extend((r["id"], r["r"]) for r in json.loads(body))
+        spark.conf.set(key, "3")
+        return 200, "ok"
+
+    audit_path = str(tmp_path / "audit")
+    try:
+        res = post_then_audit(
+            df, "http://x", transport,
+            lambda d: writers.append_versioned(d, audit_path, run_id=1, now=NOW),
+            batch_size=50,
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert res.report.ok and len(posted) == 200
+    audited = [(r["id"], r["r"]) for r in spark.read.parquet(audit_path).collect()]
+    assert sorted(audited) == sorted(posted)
+
+
+def test_post_then_audit_frees_its_checkpoint_on_every_path(spark):
+    df = spark.range(10).withColumn("r", F.rand())
+    before = _storage(spark)
+    res = post_then_audit(
+        df, "http://x", lambda url, body: (500, "boom"), lambda d: None,
+        batch_size=5,
+    )
+    assert not res.report.ok
+    assert _storage(spark) == before
+
+    def audit_down(d):
+        d.count()
+        raise RuntimeError("audit store down")
+
+    with pytest.raises(RuntimeError, match="audit store down"):
+        post_then_audit(df, "http://x", lambda url, body: (200, "ok"), audit_down)
+    assert _storage(spark) == before
+
+
+def test_ingest_workload_when_every_fetch_fails(spark, tmp_path):
+    """No document arrives: the run still writes its (empty) master and
+    child batches and hands back the report naming every failure."""
+    master_path = str(tmp_path / "master")
+    child_path = str(tmp_path / "child")
+    master, child, report = workload.ingest_workload(
+        spark, "http://x", lambda url, body: (503, "unavailable"),
+        ["org/a", "org/b"], "2023-04-12", "2023-04-12", master_path,
+        child_path, run_id=writers.make_run_id(NOW), now=NOW,
+    )
+    assert not report.ok
+    assert [q for q, _ in report.failed] == ["org/a", "org/b"]
+    assert master.count() == 0 and child.count() == 0
+    assert spark.read.parquet(master_path).count() == 0
+    assert spark.read.parquet(child_path).count() == 0
+
+
+def test_json_documents_df_empty_and_jvm_only(spark):
+    """An empty document list keeps the ``doc`` schema, and the
+    documents reach the JVM without a Python-worker RDD."""
+    one = json_source.json_documents_df(
+        spark, [json.dumps({"data": {"children": []}})], json_source.WORKLOAD_SCHEMA
+    )
+    empty = json_source.json_documents_df(spark, [], json_source.WORKLOAD_SCHEMA)
+    assert empty.columns == ["doc"]
+    assert empty.schema == one.schema
+    assert empty.count() == 0
+    assert json_source.normalize_workload(empty)[0].count() == 0
+    lineage = one._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
 
 
 def test_excel_magic_bytes_never_misparse_as_csv(spark):
